@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MICRO = 1_000_000
 
@@ -379,14 +380,23 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     REQUIRES numeric (negatable) node ids: the per-round top-1 is a
     ``max(struct(count, -label))`` aggregate, whose tie-break relies
     on ``-label`` being a total-order flip — sound for the integer
-    ids this graph family uses (ADVICE r13 #1; a non-numeric id
-    column fails loudly at analysis time on the negation).
+    ids this graph family uses (ADVICE r13 #1). A non-numeric ``s1``
+    or ``s2`` raises ``TypeError`` before anything is planned: Spark
+    would coerce numeric-looking strings silently and fail on the
+    rest only at runtime.
 
     Scale shape: per round one (node, neighbor-label) count shuffle
     plus a per-node top-1 max aggregate (map-side combined; the
     former row_number window paid a per-round repartition + sort) —
     O(|E|) per round, no wedge blowup; lineage cut every other
     round."""
+    for c in ("s1", "s2"):
+        dt = edges.schema[c].dataType
+        if not isinstance(dt, T.NumericType):
+            raise TypeError(
+                f"label_propagation needs numeric node ids; {c} is "
+                f"{dt.simpleString()} (map the ids to integers first)"
+            )
     und = edges.select(F.col("s1").alias("src"), F.col("s2").alias("dst")).unionAll(
         edges.select(F.col("s2").alias("src"), F.col("s1").alias("dst"))
     )

@@ -17,6 +17,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "huckli_spark",
     master: str | None = None,
@@ -26,10 +33,11 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster, leave ``master`` unset and size
-    ``shuffle_partitions`` to ~2-3x total cores; defaults here target
-    the local[32] test harness.
+    ``shuffle_partitions`` to ~2-3x total cores. Locally the master is
+    ``local[n]`` with ``n`` shuffle partitions, where ``n`` is
+    ``$SPARK_GRAFT_CPUS`` or else the CPUs this process may run on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))

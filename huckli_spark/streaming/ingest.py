@@ -3,9 +3,10 @@
 Continuous version of ``Warehouse.ingest`` (reference §3.1/§3.2 —
 huckli-import/src/lib.rs:183-213): a ``binaryFile`` file-source stream
 discovers new ``{prefix}.{epoch_ms}.gz`` objects, each micro-batch runs
-the same frame-split -> protowire-decode -> project pipeline, and
-``foreachBatch`` appends every target table plus the
-``files_processed`` checkpoint rows.
+the same frame-split -> protowire-decode pipeline, and
+``foreachBatch`` commits it through ``Warehouse.commit_batch`` — the
+batch path's project -> append every target table -> one
+``files_processed`` checkpoint append.
 
 Delivery semantics: the file source tracks seen files in the Spark
 streaming checkpoint, so a restarted stream never re-lists processed
@@ -29,12 +30,10 @@ import os
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from huckli_spark.ingest.decode import decode_frames
 from huckli_spark.ingest.filetypes import REGISTRY
 from huckli_spark.sources.framing import FRAMES_SCHEMA, iter_frames
-from huckli_spark.sources.listing import FileInfo
 
 if TYPE_CHECKING:
     from pyspark.sql.streaming import StreamingQuery
@@ -121,24 +120,9 @@ def stream_ingest(
         spark, directory, spec.prefix, max_files_per_trigger=max_files_per_trigger
     )
     decoded = decode_frames(frames, spec.msg)
-    multi_table = len(spec.tables) > 1
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if multi_table:
-            batch_df = batch_df.persist()
-        try:
-            sources = [
-                r[0] for r in batch_df.select("file_source").distinct().collect()
-            ]
-            if not sources:
-                return
-            for name, df in spec.project(batch_df).items():
-                warehouse.append(name, df)
-            for src in sorted(sources):
-                warehouse.save_file_processed(FileInfo.from_key(src))
-        finally:
-            if multi_table:
-                batch_df.unpersist()
+        warehouse.commit_batch(file_type, batch_df)
 
     writer = (
         decoded.writeStream.foreachBatch(write_batch)

@@ -10,8 +10,10 @@ checkpoint/--continue semantics (A16-A18).
 from __future__ import annotations
 
 import os
+import shutil
+import time
 import uuid as uuidlib
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +22,7 @@ from huckli_spark.functions.keys import helium_pubkey
 from huckli_spark.ingest.filetypes import REGISTRY
 from huckli_spark.ingest.warehouse import Warehouse
 from huckli_spark.sources.framing import write_framed_gzip
-from huckli_spark.sources.listing import FileSelection
+from huckli_spark.sources.listing import FileInfo, FileSelection
 from huckli_spark.sources.protowire import encode
 
 KEY1 = bytes(range(1, 34))
@@ -142,6 +144,164 @@ class TestCheckpoint:
     def test_continue_without_history_fails(self, wh, tmp_path):
         with pytest.raises(ValueError, match="cannot continue"):
             wh.ingest("verified-speedtest", str(tmp_path), FileSelection(continue_=True))
+
+    @pytest.mark.parametrize("acid", [False, True])
+    def test_checkpoint_calls_start_no_spark_job(self, spark, tmp_path, acid):
+        wh = Warehouse(spark, str(tmp_path / "wh"), acid=acid)
+        sc = spark.sparkContext
+        run = uuidlib.uuid4().hex
+
+        def in_group(name, fn):
+            sc.setJobGroup(f"{name}-{run}", name)
+            try:
+                return fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        in_group("write", lambda: wh.save_files_processed([_ckpt_info(PA, 1)]))
+        got = in_group("read", lambda: wh.latest_file_processed_timestamp(PA))
+        assert got == _ckpt_ts(1)
+        # control: a Spark read in its own group does show up; listener
+        # events arrive in order, so once it is visible a job of the
+        # two groups above would be too
+        in_group("control", lambda: wh.table("files_processed").collect())
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(f"control-{run}"):
+            assert time.time() < deadline, "control job never reported"
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(f"write-{run}") == []
+        assert tracker.getJobIdsForGroup(f"read-{run}") == []
+
+    @pytest.mark.parametrize("acid", [False, True])
+    def test_checkpoint_max_matches_spark_sql(self, spark, tmp_path, acid):
+        wh = Warehouse(spark, str(tmp_path / "wh"), acid=acid)
+
+        def check():
+            for prefix in (PA, PB, "absent"):
+                assert wh.latest_file_processed_timestamp(prefix) == _sql_max(
+                    wh, prefix
+                ), prefix
+
+        # files written by the former Spark-job writer: one holding two
+        # prefixes (no usable prefix statistics), a single-prefix one
+        # (answered from statistics) and an INT96 one, the default of a
+        # vanilla session (no timestamp statistics)
+        _spark_checkpoint(spark, wh, [(PA, 1), (PB, 5)])
+        check()
+        _spark_checkpoint(spark, wh, [(PA, 2)])
+        _spark_checkpoint(spark, wh, [(PA, 3)], int96=True)
+        check()
+        assert wh.latest_file_processed_timestamp(PA) == _ckpt_ts(3)
+        # driver-written: two prefixes in one file, then one prefix
+        wh.save_files_processed([_ckpt_info(PA, 2), _ckpt_info(PB, 6)])
+        check()
+        assert wh.latest_file_processed_timestamp(PB) == _ckpt_ts(6)
+        wh.save_files_processed([_ckpt_info(PA, 7)])
+        check()
+        assert wh.latest_file_processed_timestamp(PA) == _ckpt_ts(7)
+        # a later file that is not part of the table: staged but never
+        # published (acid), or a writer's hidden temp file (plain)
+        other = Warehouse(spark, str(tmp_path / "other"))
+        other.save_files_processed([_ckpt_info(PA, 9)])
+        (late,) = other._table_files("files_processed")
+        if acid:
+            staging = wh._log("files_processed").staging_dir()
+            os.makedirs(staging)
+            shutil.copy(late, os.path.join(staging, "part-late.parquet"))
+        else:
+            base = wh.table_path("files_processed")
+            shutil.copy(late, os.path.join(base, ".part-late.parquet.tmp"))
+            os.makedirs(os.path.join(base, "_temporary"))
+            shutil.copy(late, os.path.join(base, "_temporary", "part-late.parquet"))
+        check()
+        assert wh.latest_file_processed_timestamp(PA) == _ckpt_ts(7)
+
+    @pytest.mark.parametrize("acid", [False, True])
+    def test_checkpoint_max_empty_or_missing(self, spark, tmp_path, acid):
+        wh = Warehouse(spark, str(tmp_path / "wh"), acid=acid)
+        assert wh.latest_file_processed_timestamp(PA) is None
+        base = wh.table_path("files_processed")
+        os.makedirs(base)
+        open(os.path.join(base, "_SUCCESS"), "w").close()
+        assert wh.latest_file_processed_timestamp(PA) is None
+        wh.save_files_processed([])
+        assert wh.latest_file_processed_timestamp(PA) is None
+        wh.save_files_processed([_ckpt_info(PB, 1)])
+        assert wh.latest_file_processed_timestamp(PA) is None
+
+    def test_checkpoint_read_ignores_driver_timezone(self, spark, tmp_path):
+        """The checkpoint max is an instant whatever the driver's local
+        zone: reading it through a Spark collect() returned local wall
+        time, so under TZ=Asia/Tokyo the max read 9 h late and
+        --continue skipped the files of those 9 hours."""
+        saved = os.environ.get("TZ")
+        os.environ["TZ"] = "Asia/Tokyo"
+        time.tzset()
+        try:
+            wh = Warehouse(spark, str(tmp_path / "wh"))
+            _spark_checkpoint(spark, wh, [(PA, 0)])
+            assert wh.latest_file_processed_timestamp(PA) == _ckpt_ts(0)
+            assert _sql_max(wh, PA) == _ckpt_ts(0)
+            wh.save_files_processed([_ckpt_info(PA, 1)])
+            assert wh.latest_file_processed_timestamp(PA) == _ckpt_ts(1)
+            assert _sql_max(wh, PA) == _ckpt_ts(1)
+        finally:
+            if saved is None:
+                del os.environ["TZ"]
+            else:
+                os.environ["TZ"] = saved
+            time.tzset()
+
+
+# checkpoint rows for the footer-read tests: two prefixes, hourly
+# file timestamps from T0
+PA, PB = "verified_speedtest", "mobile_reward_share"
+
+
+def _ckpt_ts(hour: int) -> datetime:
+    return datetime.fromtimestamp(T0_MS / 1000 + hour * 3600, tz=timezone.utc)
+
+
+def _ckpt_info(prefix: str, hour: int) -> FileInfo:
+    return FileInfo.from_key(f"{prefix}.{T0_MS + hour * 3_600_000}.gz")
+
+
+def _spark_checkpoint(spark, wh, rows, int96: bool = False) -> None:
+    """Append checkpoint rows as the former writer did: a one-file
+    Spark parquet write through ``Warehouse.append``."""
+    infos = [_ckpt_info(p, h) for p, h in rows]
+    now = datetime.now(timezone.utc)
+    df = spark.createDataFrame(
+        [(os.path.basename(i.key), i.prefix, i.timestamp, now) for i in infos],
+        "file_name string not null, prefix string not null, "
+        "file_timestamp timestamp not null, processed_at timestamp not null",
+    ).coalesce(1)
+    conf = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(conf)
+    if int96:
+        spark.conf.set(conf, "INT96")
+    try:
+        wh.append("files_processed", df)
+    finally:
+        spark.conf.set(conf, before)
+
+
+def _sql_max(wh, prefix: str):
+    """Spark SQL's max(file_timestamp) for ``prefix``, as a UTC instant
+    (through unix_micros, so the driver's local zone cannot shift it)."""
+    if not wh.has_table("files_processed"):
+        return None
+    us = (
+        wh.table("files_processed")
+        .where(F.col("prefix") == prefix)
+        .agg(F.unix_micros(F.max("file_timestamp")).alias("us"))
+        .collect()[0]
+        .us
+    )
+    if us is None:
+        return None
+    return datetime.fromtimestamp(0, tz=timezone.utc) + timedelta(microseconds=us)
 
 
 class TestMobileDemuxExplode:

@@ -69,7 +69,7 @@ class TestStreamIngest:
 
     def test_kill_and_restart_mid_batch_no_loss_no_dupes(self, spark, tmp_path):
         """VERDICT r05 directive #6: the streaming twin of the txlog
-        crash matrix. Inject a crash INSIDE write_batch at two points
+        crash matrix. Inject a crash INSIDE the foreachBatch commit at two points
         for the second file — (a) before its data append, (b) after
         the appends but before the files_processed checkpoint (the
         reference's at-least-once gap, §3.1 step 8) — restart on the
@@ -91,7 +91,7 @@ class TestStreamIngest:
         ckpt = str(tmp_path / "ckpt")
 
         # crash (a): append of file[1] raises before any data lands
-        orig_append, orig_save = wh.append, wh.save_file_processed
+        orig_append, orig_save = wh.append, wh.save_files_processed
         state = {"arm": "append"}
 
         def failing_append(name, df, *a, **kw):
@@ -103,12 +103,12 @@ class TestStreamIngest:
                     raise RuntimeError("injected crash before append")
             return orig_append(name, df, *a, **kw)
 
-        def failing_save(info):
-            if state["arm"] == "save" and info.key == keys[1]:
+        def failing_save(infos):
+            if state["arm"] == "save" and keys[1] in {i.key for i in infos}:
                 raise RuntimeError("injected crash after append, before checkpoint")
-            return orig_save(info)
+            return orig_save(infos)
 
-        wh.append, wh.save_file_processed = failing_append, failing_save
+        wh.append, wh.save_files_processed = failing_append, failing_save
         q = stream_ingest(
             spark, "verified-speedtest", str(raw), wh, ckpt,
             max_files_per_trigger=1,

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -428,6 +429,18 @@ class TestLabelProp:
         right = {labels[k] for k in range(10, 15)}
         assert len(left) == 1 and len(right) == 1
         assert left != right
+
+    def test_string_ids_rejected_before_planning(self, spark):
+        from huckli_spark.operators.graph import label_propagation
+
+        # numeric-looking strings would coerce silently on the
+        # negation; the id check rejects the column type itself
+        e = spark.createDataFrame([("1", "2"), ("2", "x")], "s1: string, s2: string")
+        with pytest.raises(TypeError, match="numeric node ids; s1 is string"):
+            label_propagation(e)
+        mixed = spark.createDataFrame([(1, "2")], "s1: long, s2: string")
+        with pytest.raises(TypeError, match="s2 is string"):
+            label_propagation(mixed)
 
 
 class TestDecayScore:
