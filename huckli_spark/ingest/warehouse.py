@@ -18,11 +18,8 @@ Checkpoint parity (huckli-db/src/lib.rs:16-56):
   Spark job apiece was the largest fixed cost of a small round. The
   write is one small parquet file per batch (hidden temp name +
   ``os.replace``, or a txlog staging dir + publish). The read takes the
-  max from parquet footer statistics over the file set ``table()``
-  scans, reading a row group's two columns only when its statistics
-  cannot answer (mixed prefixes, or INT96 timestamps, which carry
-  none). Per-file statistics instead of a scan: the Delta Lake shape
-  (Armbrust et al., VLDB 2020) that ``txlog.py`` follows.
+  max of the ``prefix``/``file_timestamp`` columns of each file in the
+  set ``table()`` scans (``_table_files``), read with pyarrow.
 
 Scale: ingest parallelism is the file-list repartition (A9's
 ``.buffered(10)`` analog — except unbounded by a hardcoded 10; the
@@ -82,33 +79,15 @@ FILES_PROCESSED_SCHEMA = pa.schema(
 )
 
 
-def _row_group_max(pf: pq.ParquetFile, i: int, prefix: str) -> Optional[datetime]:
-    """max(file_timestamp) over one row group's rows of ``prefix``:
-    from the footer statistics when every row carries ``prefix``,
-    skipped when the prefix range excludes it, otherwise read from the
-    row group's two columns."""
-    rg = pf.metadata.row_group(i)
-    stats = {
-        rg.column(j).path_in_schema: rg.column(j).statistics
-        for j in range(rg.num_columns)
-    }
-    p, ts = stats.get("prefix"), stats.get("file_timestamp")
-    if p is not None and p.has_min_max and p.has_null_count and p.null_count == 0:
-        if prefix < p.min or prefix > p.max:
-            return None
-        if (
-            p.min == p.max
-            and ts is not None
-            and ts.has_min_max
-            and isinstance(ts.max, datetime)
-            and ts.max.tzinfo is not None
-        ):
-            return ts.max.astimezone(timezone.utc)
-    t = pf.read_row_group(i, columns=["prefix", "file_timestamp"])
-    # INT96 files read back tz-less; their values are UTC instants
+def _file_max(path: str, prefix: str) -> Optional[datetime]:
+    """max(file_timestamp) over one checkpoint file's rows of ``prefix``,
+    as a UTC instant, or None. Checkpoint files hold a batch's few rows,
+    so the two columns are read whole."""
+    t = pq.ParquetFile(path).read(columns=["prefix", "file_timestamp"])
     m = pc.max(t.filter(pc.equal(t["prefix"], prefix))["file_timestamp"])
     if not m.is_valid:
         return None
+    # INT96 files read back tz-less; their values are UTC instants
     return pc.cast(m, _UTC_US, safe=False).as_py().astimezone(timezone.utc)
 
 
@@ -191,9 +170,8 @@ class Warehouse:
         acid table (time travel — valid until vacuum sweeps the
         superseded files)."""
         base = self.table_path(name)
-        log = self._log(name)
-        if self.acid or log.exists():  # acid-ness is a table property
-            files = [os.path.join(base, f) for f in log.live_files(as_of=as_of)]
+        if self.acid or self._log(name).exists():  # acid-ness is a table property
+            files = self._table_files(name, as_of)
             if not files:
                 raise FileNotFoundError(f"acid table has no committed data: {name}")
             # explicit snapshot file list: readers never list the data
@@ -644,16 +622,19 @@ class Warehouse:
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(base, name))
 
-    def _table_files(self, name: str) -> list[str]:
-        """The parquet files ``table(name)`` scans: the txlog snapshot,
-        or the directory's files minus the ``_``/``.`` names Spark's
-        file index skips."""
+    def _table_files(self, name: str, as_of: Optional[int] = None) -> list[str]:
+        """The parquet files ``table(name)`` scans: the txlog snapshot
+        (at version ``as_of``, if given), or for a plain table the
+        directory's top-level files."""
         base = self.table_path(name)
         log = self._log(name)
         if self.acid or log.exists():
-            return [os.path.join(base, f) for f in log.live_files()]
+            return [os.path.join(base, f) for f in log.live_files(as_of=as_of)]
         if not os.path.isdir(base):
             return []
+        # mirrors the hidden-file rule of Spark's InMemoryFileIndex,
+        # which table() hands a plain table's directory to; flat tables
+        # only (files_processed), partition dirs are not descended
         return [
             os.path.join(base, f)
             for f in sorted(os.listdir(base))
@@ -662,16 +643,14 @@ class Warehouse:
 
     def latest_file_processed_timestamp(self, prefix: str) -> Optional[datetime]:
         """max(file_timestamp) of ``prefix``'s checkpoint rows as a UTC
-        instant, or None. Read on the driver from parquet footers: one
-        footer per checkpoint file, no Spark job."""
-        best: Optional[datetime] = None
-        for path in self._table_files("files_processed"):
-            pf = pq.ParquetFile(path)
-            for i in range(pf.metadata.num_row_groups):
-                ts = _row_group_max(pf, i, prefix)
-                if ts is not None and (best is None or ts > best):
-                    best = ts
-        return best
+        instant, or None. Read on the driver with pyarrow, one small
+        file per checkpoint batch — no Spark job."""
+        found = [
+            ts
+            for path in self._table_files("files_processed")
+            if (ts := _file_max(path, prefix)) is not None
+        ]
+        return max(found, default=None)
 
     # -- ingest (§3.1 steps 6-8) -------------------------------------------
     def commit_batch(
@@ -688,19 +667,28 @@ class Warehouse:
         ``file_source`` values: a stream micro-batch knows its files
         only from its rows. Returns {table: appended_rows}."""
         spec = REGISTRY[file_type]
-        multi_table = len(spec.tables) > 1
-        if multi_table:
-            # single-pass demux: decode once, serve N projections
+        # cache a batch that is read more than once: single-pass demux
+        # (decode once, serve N projections), and a stream batch is
+        # first checked for rows
+        cached = len(spec.tables) > 1 or files is None
+        if cached:
             decoded = decoded.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        batch, seen = decoded, None
-        if files is None:
-            # the file set rides the first append as an Observation
-            # metric instead of a distinct() job of its own: every
-            # append scans the whole batch, and the metric is taken
-            # below each table's row filter
-            seen = Observation()
-            batch = decoded.observe(seen, F.collect_set("file_source").alias("files"))
         try:
+            if files is None and decoded.isEmpty():
+                # its files decoded to no rows: no data and no file to
+                # checkpoint, but an unpartitioned Spark write of no
+                # rows still leaves one empty part-file per table
+                return {name: 0 for name in spec.tables}
+            batch, seen = decoded, None
+            if files is None:
+                # the file set rides the first append as an Observation
+                # metric instead of a distinct() job of its own: every
+                # append scans the whole batch, and the metric is taken
+                # below each table's row filter
+                seen = Observation()
+                batch = decoded.observe(
+                    seen, F.collect_set("file_source").alias("files")
+                )
             out: dict[str, int] = {}
             for name, df in spec.project(batch).items():
                 # batch row counts ride the WRITE action as an
@@ -718,7 +706,7 @@ class Warehouse:
             self.save_files_processed(files)
             return out
         finally:
-            if multi_table:
+            if cached:
                 decoded.unpersist()
 
     def ingest_files(

@@ -184,9 +184,8 @@ class TestCheckpoint:
                 ), prefix
 
         # files written by the former Spark-job writer: one holding two
-        # prefixes (no usable prefix statistics), a single-prefix one
-        # (answered from statistics) and an INT96 one, the default of a
-        # vanilla session (no timestamp statistics)
+        # prefixes, a single-prefix one and an INT96 one (the default of
+        # a vanilla session; it reads back tz-less)
         _spark_checkpoint(spark, wh, [(PA, 1), (PB, 5)])
         check()
         _spark_checkpoint(spark, wh, [(PA, 2)])
@@ -254,7 +253,7 @@ class TestCheckpoint:
             time.tzset()
 
 
-# checkpoint rows for the footer-read tests: two prefixes, hourly
+# checkpoint rows for the driver-side read tests: two prefixes, hourly
 # file timestamps from T0
 PA, PB = "verified_speedtest", "mobile_reward_share"
 

@@ -176,6 +176,33 @@ class TestStreamIngest:
         assert q.awaitTermination(180)
         assert wh.table("verified_speedtest_report").count() == 10
 
+    def test_zero_row_file_writes_no_part_file(self, spark, tmp_path):
+        """A micro-batch whose file decodes to no rows (an empty gz)
+        appends nothing: an unpartitioned Spark write of an empty
+        DataFrame leaves one empty part-file, so the batch is skipped
+        before its appends. The file gets no checkpoint row, as it has
+        no rows to name it."""
+        import pyarrow.parquet as pq
+
+        raw = tmp_path / "raw"
+        raw.mkdir()
+        keys = [f"verified_speedtest.{T0_MS + i * 3_600_000}.gz" for i in range(2)]
+        write_framed_gzip(str(raw / keys[0]), _speedtest_payloads(10))
+        write_framed_gzip(str(raw / keys[1]), [])
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        q = stream_ingest(
+            spark, "verified-speedtest", str(raw), wh, str(tmp_path / "ckpt"),
+            max_files_per_trigger=1,
+        )
+        assert q.awaitTermination(180)
+        assert wh.table("verified_speedtest_report").count() == 10
+        done = {r[0] for r in wh.table("files_processed")
+                .select("file_name").collect()}
+        assert done == {keys[0]}
+        parts = wh._table_files("verified_speedtest_report")
+        assert parts
+        assert all(pq.ParquetFile(p).metadata.num_rows > 0 for p in parts)
+
 
 _EV_SCHEMA = T.StructType(
     [
