@@ -89,13 +89,6 @@ def _pubkey_batch(keys: pd.Series) -> pd.Series:
 def helium_pubkey_udf(col: Column) -> Column:
     """Arrow-batched pubkey encoder (UDF created lazily — pandas_udf
     needs an active SparkSession to resolve its return type)."""
-    from pyspark.sql import SparkSession
-
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_package_on_executors(active)
     return pandas_udf(_pubkey_batch, "string")(col)
 
 

@@ -84,24 +84,6 @@ def sql_dot(a: str, b: str) -> str:
     return _guarded(a, b, terms, fold, n)
 
 
-def sql_dot_rhs_double(a: str, b: str) -> str:
-    """Dot product where ``b`` is already double (literal hyperplane /
-    centroid arrays): only the left element is cast, matching the
-    existing fold text bit-for-bit."""
-    fold = (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * y),"
-        f" cast(0.0 AS double), (acc, v) -> acc + v)"
-    )
-    n = unroll_width()
-    if n <= 0:
-        return fold
-    terms = "cast(0.0 AS double) + " + " + ".join(
-        f"cast(element_at({a}, {i}) AS double) * element_at({b}, {i})"
-        for i in range(1, n + 1)
-    )
-    return _guarded(a, b, terms, fold, n)
-
-
 def sql_sqdist(a: str, b: str) -> str:
     """Squared L2 in double precision with per-element casts on both
     sides — the exact text the ANN serve/recall paths fold today."""

@@ -71,13 +71,6 @@ def decode_frames(frames: DataFrame, msg: Msg, dropped_acc=None) -> DataFrame:
     """
     import pandas as pd
 
-    from pyspark.sql import SparkSession
-
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_package_on_executors(active)
     schema = decoded_schema(msg)
     field_names = [f.name for f in msg.fields]
     u64_fields = [f.name for f in msg.fields if f.ptype == "uint64" and not f.repeated]

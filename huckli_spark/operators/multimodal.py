@@ -43,8 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from huckli_spark.runtime import ensure_package_on_executors
-
 IMG_MAGIC = b"HKI1"  # HKI1 | u16 w | u16 h | u8 c | pixels (w*h*c u8)
 AUD_MAGIC = b"HKA1"  # HKA1 | u32 sample_rate | i16 samples
 VID_MAGIC = b"HKV1"  # HKV1 | u16 n_frames | frames (each a full HKI1 blob)
@@ -574,8 +572,6 @@ def image_features(
     ``hist_bins``-bucket grayscale histogram -> array<double>.
     mapInPandas; one output row per input image; undecodable blobs
     yield null features (drop-and-continue policy, A8 analog)."""
-    spark = df.sparkSession
-    ensure_package_on_executors(spark)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -614,7 +610,6 @@ def resize_images(
     df: DataFrame, width: int, height: int, id_col: str = "media_id", data_col: str = "data"
 ) -> DataFrame:
     """Nearest-neighbor resize to (width, height); re-encoded HKI1."""
-    ensure_package_on_executors(df.sparkSession)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -651,7 +646,6 @@ def sample_frames(
 ) -> DataFrame:
     """Explode videos into every ``every``-th frame (HKI1 blobs) —
     one-to-many mapInPandas, the A12-explode analog for media."""
-    ensure_package_on_executors(df.sparkSession)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -687,7 +681,6 @@ def audio_features(
     df: DataFrame, id_col: str = "media_id", data_col: str = "data"
 ) -> DataFrame:
     """Audio decode + RMS / zero-crossing-rate features."""
-    ensure_package_on_executors(df.sparkSession)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -786,8 +779,6 @@ def image_dhash(
     sketch.simhash_pairs_from_signatures (equi-join on 15-bit chunks,
     never all-pairs). Undecodable or sub-grid (< 6x11) blobs yield a
     null hash (drop-and-continue, the A8 policy)."""
-    spark = df.sparkSession
-    ensure_package_on_executors(spark)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -868,7 +859,6 @@ def audio_fingerprint(
     """(id, ahash): decode audio blobs (WAV or HKA1) via one Arrow
     mapInPandas pass and fingerprint with :func:`audio_energy_hash`.
     Undecodable / too-short blobs yield null (A8 policy)."""
-    ensure_package_on_executors(df.sparkSession)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -925,7 +915,6 @@ def video_frame_hashes(
     HKV1 container, dHash every frame with the shared
     :func:`dhash_bits` core. One Arrow pass, O(frames x pixels) per
     video; undecodable videos / sub-grid frames drop (A8)."""
-    ensure_package_on_executors(df.sparkSession)
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -641,11 +641,15 @@ def encode_counts(
             f"(got {id_type}); pass form='sql' for other id types"
         )
 
+    # A NULL id crosses as 0 plus a flag: Arrow->pandas turns a bigint
+    # column holding nulls into float64, which is inexact past 2^53.
     def kernel(batches):
         memo: dict = {}
         for pdf in batches:
             ids, nts, cms = [], [], []
-            for i, txt in zip(pdf[id_col].values, pdf[text_col]):
+            for i, null, txt in zip(
+                pdf[id_col].values, pdf["__id_null"].values, pdf[text_col]
+            ):
                 if txt is None:
                     continue
                 nt = 0
@@ -661,20 +665,22 @@ def encode_counts(
                     nt += r[0]
                     cm += r[1]
                 if nt > 0:
-                    ids.append(i)
+                    ids.append(None if null else i)
                     nts.append(nt)
                     cms.append(cm)
             yield pd.DataFrame(
                 {
-                    id_col: pd.array(ids, dtype="int64"),
+                    id_col: pd.array(ids, dtype="Int64"),
                     "n_tokens": pd.array(nts, dtype="int64"),
                     "cost_micro": pd.array(cms, dtype="int64"),
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, f"{id_col} {id_type}, n_tokens long, cost_micro long"
-    )
+    return docs.select(
+        F.coalesce(id_col, F.lit(0)).alias(id_col),
+        F.col(id_col).isNull().alias("__id_null"),
+        text_col,
+    ).mapInPandas(kernel, f"{id_col} {id_type}, n_tokens long, cost_micro long")
 
 
 # --------------------------------------------------- pure-Python reference

@@ -10,10 +10,13 @@ behavioral parity with the reference.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import functools
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from huckli_spark.session import ensure_package_on_executors
 
 
 @dataclass(frozen=True)
@@ -28,10 +31,20 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def query(name: str, oracle: Optional[str], doc: str = ""):
-    """Decorator registering a parity query."""
+    """Decorator registering a parity query.
+
+    ``QuerySpec.build`` ships the package to the session's executors
+    before it plans, so a query runs on a session the engine did not
+    build (the driver contract's harness builds its own). The module
+    keeps the undecorated function."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        _REGISTRY[name] = QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or fn.__doc__ or "")
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_package_on_executors(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = QuerySpec(name=name, build=build, oracle=oracle, doc=doc or fn.__doc__ or "")
         return fn
 
     return wrap

@@ -316,10 +316,7 @@ def _cosupply_edges(
     The guide §2.4/§3.3 rule, refined: materialize an intermediate
     that a large plan references repeatedly ONLY where those
     references execute as separate jobs or exchange on distinct keys.
-    The k-core oracle mirrors the cut with ``e AS MATERIALIZED``.
-
-    ``SPARK_GRAFT_GRAPH_EDGE_MAT`` overrides per-query defaults for
-    A/B measurement (0 = always lazy, 1 = always materialize)."""
+    The k-core oracle mirrors the cut with ``e AS MATERIALIZED``."""
     from huckli_spark.operators.cache import eager_release
     from huckli_spark.session import load_table
 
@@ -341,22 +338,6 @@ def _cosupply_edges(
         )
         .distinct()
     )
-    env = os.environ.get("SPARK_GRAFT_GRAPH_EDGE_MAT")
-    if env is not None:
-        # A/B-only override (ADVICE r13 #2): a stale env var silently
-        # flips per-query measured decisions (common_neighbors/bfs
-        # chose lazy because materialization measured 1.16-1.26x
-        # slower), so make any use of it loud.
-        import warnings
-
-        warnings.warn(
-            "SPARK_GRAFT_GRAPH_EDGE_MAT is set — overriding the "
-            "measured per-query edge-materialization decision "
-            f"(materialize={env != '0'}); this knob is for A/B runs "
-            "only",
-            stacklevel=2,
-        )
-        materialize = env != "0"
     return eager_release(e) if materialize else e
 
 

@@ -41,9 +41,6 @@ def _media_df(spark: SparkSession, sf_dir: str, limit: int = 300) -> DataFrame:
     doc_id % 3 picks the modality, blobs are seeded by doc_id."""
     import pandas as pd  # noqa: F401
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     ids = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select("doc_id")
@@ -206,9 +203,6 @@ _IMG_H, _IMG_W = 24, 33  # 6x11 grid -> exact 4x3 blocks
 def _dedup_media_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     ids = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select("doc_id")
@@ -392,9 +386,6 @@ _AUD_LEN = 1220  # 61 frames x 20 samples, exact edges
 def _audio_media_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     ids = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select("doc_id")
@@ -481,9 +472,6 @@ _VID_H, _VID_W = 24, 33
 def _video_media_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     ids = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select("doc_id")

@@ -8,11 +8,26 @@ Parity notes (vs reference):
   runtime re-planning (skew joins, dynamic coalescing), a shuffle
   partition count sized for the local harness but overridable for a
   real cluster, and Arrow for the Pandas-UDF fast path.
+
+Executor code: the ``mapInPandas`` kernels and Pandas UDFs close over
+functions in this package, which cloudpickle serializes by reference,
+so every Python worker must be able to ``import huckli_spark``.
+``ensure_package_on_executors`` ships the package as a zip through
+``SparkContext.addPyFile``. It runs in ``get_spark`` and in every
+registry query's ``build`` (see ``huckli_spark.queries.query``), so no
+operator has to remember it. Code that drives the engine's operators
+on a session not built by ``get_spark`` (a notebook, spark-submit from
+elsewhere) calls it once, as ``--py-files huckli_spark.zip`` would on a
+cluster.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +37,43 @@ def _usable_cpus() -> int:
         return len(os.sched_getaffinity(0))
     except AttributeError:  # no affinity API (macOS)
         return os.cpu_count() or 1
+
+
+_ZIP: str | None = None
+_SHIPPED: set[str] = set()
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
+def _package_zip() -> str:
+    """Zip of the package's ``.py`` files, built once per process under
+    a name no other process holds, and removed at exit."""
+    global _ZIP
+    if _ZIP is None:
+        import huckli_spark
+
+        pkg_dir = os.path.dirname(os.path.abspath(huckli_spark.__file__))
+        fd, path = tempfile.mkstemp(prefix="huckli_spark_pkg_", suffix=".zip")
+        atexit.register(_remove, path)
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for root, _, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        _ZIP = path
+    return _ZIP
+
+
+def ensure_package_on_executors(spark: SparkSession) -> None:
+    """Ship the package to ``spark``'s executors, once per application."""
+    sc = spark.sparkContext
+    if sc.applicationId not in _SHIPPED:
+        sc.addPyFile(_package_zip())
+        _SHIPPED.add(sc.applicationId)
 
 
 def get_spark(
@@ -61,7 +113,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_package_on_executors(spark)
+    return spark
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -140,32 +194,3 @@ def load_events_timebound(spark: SparkSession, sf_dir: str, lo_iso: str, hi_iso:
         & (F.col("ts") < F.lit(hi_iso).cast("timestamp"))
     )
 
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True):
-    """Load the driver's parquet fixture tables and (optionally) register
-    them as temp views so both DataFrame and ``spark.sql`` plans work.
-    Returns {name: DataFrame}."""
-    out = {}
-    for name in TPCH_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

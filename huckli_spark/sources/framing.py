@@ -11,9 +11,11 @@ batches of (file_source, frame_index, payload) — no whole-file
 buffering (parity with the reference's async framed stream), and the
 decode work scales horizontally with the file count.
 
-Truncated trailing frames are tolerated (dropped with a counter),
-matching the reference's error-drop policy
-(huckli-import/src/lib.rs:227-235).
+A truncated trailing frame ends the file's read: ``iter_frames`` drops
+it without counting it, as the reference's framed read simply ends.
+Frames that are complete but do not decode are the ones counted
+(``decode_frames``'s ``dropped_acc``), matching the reference's
+error-drop policy (huckli-import/src/lib.rs:227-235).
 """
 
 from __future__ import annotations
@@ -99,9 +101,6 @@ def frames_df(
     """
     import pandas as pd
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     files = spark.createDataFrame(
         [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType(), False)])
     )

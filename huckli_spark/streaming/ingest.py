@@ -57,9 +57,6 @@ def stream_frames(
     """
     import pandas as pd
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     binary_schema = (
         "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
     )
@@ -119,7 +116,7 @@ def stream_ingest(
     frames = stream_frames(
         spark, directory, spec.prefix, max_files_per_trigger=max_files_per_trigger
     )
-    decoded = decode_frames(frames, spec.msg)
+    decoded = decode_frames(frames, spec.msg, dropped_acc=warehouse.dropped_frames)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         warehouse.commit_batch(file_type, batch_df)

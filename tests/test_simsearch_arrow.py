@@ -7,13 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from huckli_spark.operators.simsearch import cosine_topk, cosine_topk_arrow
-from huckli_spark.runtime import ensure_package_on_executors
 from tests.conftest import SF_SMALL
 
 
 @pytest.mark.parametrize("k", [3, 5])
 def test_arrow_matches_jvm(spark, k):
-    ensure_package_on_executors(spark)
     em = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     q = em.where(F.col("vec_id") < 10)
     jvm = {tuple(r) for r in cosine_topk(em, q, k=k).collect()}
@@ -24,7 +22,6 @@ def test_arrow_matches_jvm(spark, k):
 def test_arrow_multi_partition(spark):
     # per-batch top-k + final window must survive an arbitrary
     # partitioning of the corpus
-    ensure_package_on_executors(spark)
     em = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").repartition(7)
     q = em.where(F.col("vec_id") < 5)
     jvm = {tuple(r) for r in cosine_topk(em, q, k=4).collect()}

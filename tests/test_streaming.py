@@ -203,6 +203,23 @@ class TestStreamIngest:
         assert parts
         assert all(pq.ParquetFile(p).metadata.num_rows > 0 for p in parts)
 
+    def test_dropped_frames_are_counted(self, spark, tmp_path):
+        """A frame the stream cannot decode is counted in the
+        warehouse's ``dropped_frames``, as the batch path counts it."""
+        raw = tmp_path / "raw"
+        raw.mkdir()
+        payloads = _speedtest_payloads(4)
+        # complete frame, invalid protobuf: LEN field claiming 255 bytes
+        payloads.insert(2, b"\x0a\xff\x01")
+        write_framed_gzip(str(raw / f"verified_speedtest.{T0_MS}.gz"), payloads)
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        q = stream_ingest(
+            spark, "verified-speedtest", str(raw), wh, str(tmp_path / "ckpt")
+        )
+        assert q.awaitTermination(180)
+        assert wh.table("verified_speedtest_report").count() == 4
+        assert wh.dropped_frames.value == 1
+
 
 _EV_SCHEMA = T.StructType(
     [

@@ -227,10 +227,11 @@ class TestEncodeCountsArrow:
     ]
 
     def _docs(self, spark):
-        return spark.createDataFrame(
-            [(i, t) for i, t in enumerate(self.ADVERSARIAL)],
-            "doc_id long, text string",
-        )
+        # plus a NULL id (emitted with a null id) beside an id past
+        # 2^53, in one partition so both cross in the same Arrow batch
+        rows = [(i, t) for i, t in enumerate(self.ADVERSARIAL)]
+        rows += [(None, "nation zzz"), (2**53 + 1, "nation")]
+        return spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
 
     def test_arrow_matches_sql_rows_exactly(self, spark):
         from huckli_spark.operators.unigram_lm import encode_counts
@@ -241,12 +242,14 @@ class TestEncodeCountsArrow:
         )
         vrows = [(r.piece, r.cost) for r in vocab.collect()]
         a = sorted(
-            tuple(r)
-            for r in encode_counts(docs, vrows, 4, form="arrow").collect()
+            (tuple(r)
+             for r in encode_counts(docs, vrows, 4, form="arrow").collect()),
+            key=repr,
         )
         b = sorted(
-            tuple(r)
-            for r in encode_counts(docs, vrows, 4, form="sql").collect()
+            (tuple(r)
+             for r in encode_counts(docs, vrows, 4, form="sql").collect()),
+            key=repr,
         )
         assert a == b and len(a) > 0
 

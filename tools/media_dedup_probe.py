@@ -31,9 +31,6 @@ def media_df(spark, n_images: int, n_fam: int):
 
     import pandas as pd  # noqa: F401
 
-    from huckli_spark.runtime import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     ids = spark.range(n_images).selectExpr("id AS media_id")
 
     def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
