@@ -541,10 +541,11 @@ class Warehouse:
         instead (operators/zorder.py) — every participating column
         keeps min/max locality, the OPTIMIZE ZORDER BY semantics. Run
         it out-of-band, like the reference user would run
-        VACUUM/OPTIMIZE.
+        VACUUM/OPTIMIZE. A logged table commits the rewrite as one
+        snapshot-replace log entry (readers see the old snapshot until
+        it lands; the old files become vacuumable orphans), so its
+        history stays readable with ``as_of``.
         """
-        import shutil
-
         df = self.table(name)
         n = target_partitions or df.rdd.getNumPartitions()
         if zorder:
@@ -555,20 +556,7 @@ class Warehouse:
             compacted = df.repartitionByRange(
                 n, *sort_cols
             ).sortWithinPartitions(*sort_cols)
-        if self.acid:
-            # snapshot-replace commit: readers see the old snapshot
-            # until the log entry lands; old files become vacuumable
-            # orphans (OPTIMIZE semantics)
-            log = self._log(name)
-            staging = log.staging_dir()
-            compacted.write.mode("overwrite").parquet(staging)
-            log.publish(staging, replace_all=True)
-            return
-        tmp = self.table_path(f"__compact_{name}")
-        compacted.write.mode("overwrite").parquet(tmp)
-        final = self.table_path(name)
-        shutil.rmtree(final)
-        os.replace(tmp, final)
+        self._replace_snapshot(name, compacted)
 
     def bucketed_table(self, name: str) -> DataFrame:
         """Read a bucketed table WITH its bucket spec (the plain
@@ -731,14 +719,11 @@ class Warehouse:
         warn_placeholder_enums(spec.msg, file_type)
         file_paths = [paths[f.key] if paths else f.key for f in files]
         frames = frames_df(self.spark, file_paths)
-        # NOT fanned out (r13, measured): spreading the framed
-        # payloads to core-count partitions before the decode looked
-        # like the §2.1 shape, but the paired A/B said otherwise
-        # (ingest bench old_med 2.62 s vs fan_out 3.00 s) — the
-        # payload shuffle + extra stage costs more than the idle
-        # cores return at per-batch sizes, and at the 100 TB shape
-        # the batch already has >= core-count files so the fan_out
-        # would be a no-op anyway. Decode parallelism stays per-file.
+        # Decode parallelism is set by frames_df: the framed read runs
+        # one task per file, and the frames are repartitioned to
+        # defaultParallelism when the batch holds fewer files than
+        # that. At the 100 TB shape a batch already has >= core-count
+        # files and that shuffle is skipped.
         decoded = decode_frames(frames, spec.msg, dropped_acc=self.dropped_frames)
         return self.commit_batch(file_type, decoded, list(files))
 

@@ -20,7 +20,7 @@ production-grade and tested. The codec itself is pluggable:
   the dependency named (STUB, clearly marked).
 - The deterministic "HK" formats below (HKI1 images, HKA1 audio,
   HKV1 video = concatenated HKI1 frames) exercise every byte of the
-  plumbing with real math (numpy resize, channel stats, RMS/ZCR,
+  plumbing with real math (channel stats, histograms, RMS/ZCR,
   frame sampling) and make the tests hermetic; image stages accept
   HKI1 and PNG interchangeably via ``decode_any_image``.
 
@@ -596,40 +596,6 @@ def image_features(
             )
 
     return df.select(F.col(id_col), F.col(data_col)).mapInPandas(run, _IMG_FEAT_SCHEMA)
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("data", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, id_col: str = "media_id", data_col: str = "data"
-) -> DataFrame:
-    """Nearest-neighbor resize to (width, height); re-encoded HKI1."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from huckli_spark.operators import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                try:
-                    arr = mm.decode_any_image(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    rows.append((int(mid), None))
-                    continue
-                h, w, _ = arr.shape
-                yi = (np.arange(height) * h // height).clip(0, h - 1)
-                xi = (np.arange(width) * w // width).clip(0, w - 1)
-                rows.append((int(mid), mm.encode_image(arr[yi][:, xi])))
-            yield pd.DataFrame(rows, columns=["media_id", "data"])
-
-    return df.select(F.col(id_col), F.col(data_col)).mapInPandas(run, _RESIZE_SCHEMA)
 
 
 _FRAME_SCHEMA = T.StructType(

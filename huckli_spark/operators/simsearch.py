@@ -29,13 +29,8 @@ def _as_double(col) -> Column:
 
 
 def dot(a: str, b: str) -> Column:
-    """Sequential-fold dot product in double precision.
-
-    Emitted through vecfold.sql_dot: at the configured embedding dim
-    the fold is unrolled into a codegen-able sum (bit-identical —
-    guarded on exact size, left-assoc order preserved; guide §4.1),
-    every other width falls back to the interpreted fold. Operands
-    must be plain column references."""
+    """Sequential-fold dot product in double precision, emitted as
+    the fold text of vecfold.sql_dot."""
     return F.expr(vecfold.sql_dot(a, b))
 
 
@@ -345,73 +340,6 @@ def maxsim_topk_ivf(
         F.broadcast(tok_bag), "query_id"
     )
     return _maxsim_regroup(pairs, k)
-
-
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Arrow-batched top-k cosine neighbors — the high-dimension switch
-    for :func:`cosine_topk` (SCALE.md): one BLAS matmul per Arrow batch
-    via ``mapInPandas`` instead of per-row JVM folds. Same output
-    contract (query_id, neighbor_id, cos_sim, rank), same portable
-    rounding before ranking.
-
-    Scale shape: the query matrix is a bounded driver-side collect
-    (the broadcast pattern); the corpus never shuffles; each partition
-    emits only its local top-k per query, so the final window ranks
-    O(partitions x queries x k) rows, not the corpus.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    n_q = len(qids)
-
-    out_schema = "query_id long, neighbor_id long, cos_sim double"
-
-    def part(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nids = pdf[id_col].to_numpy(dtype=np.int64)
-            nm = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            nm = nm / np.linalg.norm(nm, axis=1, keepdims=True)
-            cos = nm @ qn.T  # (batch, n_q)
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6  # fround(…, 6)
-            # self-matches must not occupy a top-k slot
-            cos[nids[:, None] == qids[None, :]] = -np.inf
-            kk = min(k, cos.shape[0])
-            qcol, ncol, scol = [], [], []
-            for qi in range(n_q):
-                # lexicographic (cos DESC, neighbor_id ASC): ties at the
-                # cut must resolve exactly as the final window will
-                order = np.lexsort((nids, -cos[:, qi]))[:kk]
-                keep = order[np.isfinite(cos[order, qi])]
-                qcol.append(np.full(len(keep), qids[qi]))
-                ncol.append(nids[keep])
-                scol.append(cos[keep, qi])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "cos_sim": np.concatenate(scol),
-                }
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(part, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
 
 
 def cosine_pairs(

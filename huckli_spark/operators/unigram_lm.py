@@ -230,34 +230,33 @@ def _sql_str(s: str) -> str:
 
 
 def frozen_vocab_expr(vocab_rows: list) -> str:
-    """Bake a trained (piece, cost) table as a map literal for
-    stateless streaming serving (the q_stream_dsir baked-table
-    pattern). Plan size is O(vocab); MEASURED crossover
-    (SCALE_PROBE_unigram_vocab.json, 100k docs): the literal wins at
-    1k/8k pieces, loses by 32k (238 s vs 146 s — a 3.5 MB expression
-    to compile), so above ~10k pieces production serves via
-    foreachBatch with ``encode_docs_broadcast``'s one-row broadcast
-    map instead."""
+    """Bake a trained (piece, cost) table as a map literal for the
+    in-row tokenize expression. Plan size is O(vocab); MEASURED
+    (SCALE_PROBE_unigram_vocab.json, 100k docs): the literal plan
+    wins at 1k/8k pieces and loses by 32k (238 s vs 146 s — a 3.5 MB
+    expression to compile). The serving paths do not bake it:
+    ``unigram_encode`` ships the vocab as one broadcast row, and
+    ``encode_counts`` carries it in its Arrow kernel's closure."""
     entries = ", ".join(
         f"{_sql_str(p)}, {int(c)}L" for p, c in sorted(vocab_rows)
     )
     return f"map({entries})"
 
 
-def _tokens_expr(vc: str, lmax, text_col: str) -> str:
-    """The document-tokenize expression core, parameterized on the
-    vocab-map SQL expression (a baked literal OR the broadcast
-    ``__vc`` column) and the lookback bound (an int or ``__vmax``):
-    split to words (WCAP-truncated), per-word forward DP + backtrack.
-    Returns a struct(tokens array<string>, cost_micro bigint)
-    expression."""
+def tokens_in_row_expr(vocab_rows: list, max_piece_len: int,
+                       text_col: str = "text") -> str:
+    """Whole-document tokenization as ONE stateless in-row expression
+    against the baked vocab LITERAL: split to words (WCAP-truncated),
+    per-word forward DP + backtrack. Returns a struct(tokens
+    array<string>, cost_micro bigint) expression."""
+    vc = frozen_vocab_expr(vocab_rows)
     words = (
         f"transform(filter(split({text_col}, ' '), x -> x <> ''),"
         f" x -> substring(x, 1, {WCAP}))"
     )
     staged = (
         f"transform({words}, w -> named_struct('w', w,"
-        f" 'best', {_forward_expr(lmax, 'w', vc)}))"
+        f" 'best', {_forward_expr(max_piece_len, 'w', vc)}))"
     )
     return (
         f"named_struct('tokens', flatten(transform({staged},"
@@ -265,99 +264,6 @@ def _tokens_expr(vc: str, lmax, text_col: str) -> str:
         f" 'cost_micro', aggregate({staged}, cast(0 as bigint),"
         " (acc, s) -> acc + element_at(s.best, length(s.w) + 1)"
         f" div {JSHIFT}))"
-    )
-
-
-def tokens_in_row_expr(vocab_rows: list, max_piece_len: int,
-                       text_col: str = "text") -> str:
-    """Whole-document tokenization as ONE stateless in-row
-    expression against the baked vocab LITERAL (plan weight O(vocab);
-    the streaming serving path at vocabs in the thousands)."""
-    return _tokens_expr(frozen_vocab_expr(vocab_rows), max_piece_len,
-                        text_col)
-
-
-# Literal-vs-broadcast crossover, MEASURED (SCALE_PROBE_unigram_vocab
-# .json, 100k docs x 12 words): the baked literal wins at 1k (5.0 vs
-# 15.5 s) and 8k pieces (33.9 vs 57.3 s), loses at 32k (237.6 vs
-# 145.8 s — a 3.5 MB expression to compile). The flip is between 8k
-# and 32k; 10k is the documented "above ~10k serve via broadcast"
-# operating point.
-LITERAL_PIECE_BOUND = 10_000
-
-
-def encode_docs(
-    docs: DataFrame,
-    vocab: DataFrame,
-    max_piece_len: int | None = None,
-    text_col: str = "text",
-    plan_form: str = "auto",
-) -> DataFrame:
-    """THE batch serving entry point (VERDICT r10 #7): one call that
-    picks the tokenization plan form itself, mirroring
-    ``clustering.kmeans_fit``'s broadcast-codebook auto-switch.
-
-    'literal' bakes the (piece, cost) table into the in-row DP
-    expression (fastest below ~10k pieces); 'broadcast' ships it as a
-    one-row broadcast map (plan O(1) in vocab — the 100k-piece
-    regime); 'auto' switches on ``LITERAL_PIECE_BOUND`` using the
-    vocab's own row count. Output is bit-identical across arms
-    (pinned in tests/test_unigram_lm.py at the boundary): the input
-    columns plus ``tk struct<tokens array<string>, cost_micro
-    bigint>``. Streaming keeps calling :func:`tokens_in_row_expr`
-    directly — a stateless stream can't re-resolve a broadcast, so
-    the literal IS its production form (foreachBatch callers get the
-    switch by calling this)."""
-    from huckli_spark.operators.parallel import fan_out
-
-    if plan_form not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"plan_form must be auto|literal|broadcast, "
-                         f"got {plan_form!r}")
-    if plan_form == "auto":
-        # vocab relations are vocab-sized by construction; the count
-        # is the same bounded scan the literal arm's collect would do
-        plan_form = (
-            "literal" if vocab.count() <= LITERAL_PIECE_BOUND
-            else "broadcast"
-        )
-    if plan_form == "broadcast":
-        return encode_docs_broadcast(docs, vocab, max_piece_len, text_col)
-    rows = [(r["piece"], r["cost"]) for r in vocab.collect()]
-    if not rows:
-        # auto routes count 0 <= bound here; without this guard the
-        # lmax max() below raises a bare 'max() arg is an empty
-        # sequence' (ADVICE r11 #4)
-        raise ValueError(
-            "vocab is empty — train or load a vocab before encoding"
-        )
-    lmax = (max_piece_len if max_piece_len is not None
-            else max(len(p) for p, _ in rows))
-    return fan_out(docs).withColumn(
-        "tk", F.expr(tokens_in_row_expr(rows, lmax, text_col))
-    )
-
-
-def encode_docs_broadcast(docs: DataFrame, vocab: DataFrame,
-                          max_piece_len: int | None = None,
-                          text_col: str = "text") -> DataFrame:
-    """Document-level tokenization via the ONE-ROW broadcast vocab
-    map — the production serving path at 100k+ piece vocabs, where
-    the baked literal's O(vocab) plan weight is prohibitive (the
-    frozen_vocab_expr trade, measured in
-    SCALE_PROBE_unigram_vocab.json). Same in-row DP; plan size O(1)
-    in vocab. In streaming, run this inside foreachBatch (the
-    broadcast re-resolves per micro-batch). Output is bit-identical
-    to the literal path (pinned in tests/test_unigram_lm.py):
-    (input columns..., tk struct<tokens array<string>, cost_micro
-    bigint>)."""
-    from huckli_spark.operators.parallel import fan_out
-
-    expr = _tokens_expr("__vc", _lspec(max_piece_len), text_col)
-    return (
-        fan_out(docs)
-        .crossJoin(F.broadcast(_vocab_onerow(vocab)))
-        .withColumn("tk", F.expr(expr))
-        .drop("__vc", "__vmax")
     )
 
 
@@ -564,6 +470,11 @@ def unigram_encode(
 
 
 # ----------------------------------------------- Arrow encode-counts kernel
+# Distinct words one encode_counts task memoizes before it clears the
+# memo (about 15 MB of str -> (int, int) entries at the cap).
+MEMO_CAP = 100_000
+
+
 def _word_ntok_cost(word: str, vc: dict, max_piece_len: int) -> tuple:
     """(n_tokens, cost) for ONE word — the exact integer op chain of
     ``_forward_expr`` + ``_backtrack_expr`` (same JSHIFT key packing,
@@ -595,7 +506,7 @@ def encode_counts(
     max_piece_len: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    form: str | None = None,
+    form: str = "arrow",
 ) -> DataFrame:
     """(id, n_tokens, cost_micro) for every document with >= 1 token —
     the streaming-serve relation of q_unigram_serve /
@@ -603,21 +514,22 @@ def encode_counts(
     (mapInPandas is stateless, so the stream stays append-mode with
     zero state store).
 
-    Default ``arrow`` form (guide §4.2, the r13 triplets discipline):
-    one mapInPandas kernel replays the integer Viterbi DP in Python
-    with a per-task memo keyed on the word string — the DP runs once
-    per DISTINCT word per task instead of once per word INSTANCE
-    (Zipf makes distinct << instances at any scale), and only
-    (id, text) crosses the Arrow boundary. Measured at sf0.1
-    (paired in-session A/B, 4 pairs): SQL in-row fold 2.3 s/run vs
-    Arrow kernel 0.75 s/run, ratio 0.34, rows bit-identical (all
-    arithmetic is int64). ``form='sql'`` (or
-    SPARK_GRAFT_UNIGRAM_ENCODE=sql) keeps the pure-JVM in-row
-    expression — the no-Python-runtime deployment escape hatch."""
-    import os
+    The ``arrow`` form (guide §4.2, the r13 triplets discipline) is
+    the one every query runs: one mapInPandas kernel replays the
+    integer Viterbi DP in Python with a per-task memo keyed on the
+    word string — the DP runs once per DISTINCT word per task instead
+    of once per word INSTANCE (Zipf makes distinct << instances at any
+    scale), and only (id, text) crosses the Arrow boundary. The memo
+    is cleared at ``MEMO_CAP`` words, so a task's memory stays bounded
+    on any vocabulary; a cleared word is recomputed to the same value.
+    Measured at sf0.1 (paired in-session A/B, 4 pairs): SQL in-row
+    fold 2.3 s/run vs Arrow kernel 0.75 s/run, ratio 0.34.
 
-    if form is None:
-        form = os.environ.get("SPARK_GRAFT_UNIGRAM_ENCODE", "arrow")
+    ``form='sql'`` is the in-row JVM expression of
+    :func:`tokens_in_row_expr`. Its only role is to be the reference
+    the Arrow kernel's rows are compared against in
+    tests/test_unigram_lm.py (all arithmetic is int64, so the rows
+    are bit-identical)."""
     if form == "sql":
         expr = tokens_in_row_expr(vocab_rows, max_piece_len, text_col)
         return (
@@ -634,11 +546,11 @@ def encode_counts(
 
     vc = dict(vocab_rows)
     lmax = max_piece_len
+    cap = MEMO_CAP
     id_type = docs.schema[id_col].dataType.simpleString()
     if id_type != "bigint":
         raise ValueError(
-            f"encode_counts arrow form requires a bigint {id_col!r} "
-            f"(got {id_type}); pass form='sql' for other id types"
+            f"encode_counts requires a bigint {id_col!r} (got {id_type})"
         )
 
     # A NULL id crosses as 0 plus a flag: Arrow->pandas turns a bigint
@@ -660,6 +572,8 @@ def encode_counts(
                     w = w[:WCAP]
                     r = memo.get(w)
                     if r is None:
+                        if len(memo) >= cap:
+                            memo.clear()
                         r = _word_ntok_cost(w, vc, lmax)
                         memo[w] = r
                     nt += r[0]

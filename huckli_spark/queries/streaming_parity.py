@@ -1423,8 +1423,7 @@ def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     # r14: the encode leg is the word-memoized Arrow kernel (exact
     # integer DP replay; empty/whitespace-only docs drop in-kernel,
-    # matching the batch oracle's inner join — ADVICE r08 #3);
-    # SPARK_GRAFT_UNIGRAM_ENCODE=sql restores the in-row fold
+    # matching the batch oracle's inner join — ADVICE r08 #3)
     toks = U.encode_counts(stream, vrows, 4)
     return run_to_memory(toks, output_mode="append")
 
@@ -1485,8 +1484,7 @@ def q_unigram_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_dir = stage_table_stream(sf_dir, "documents", n_files=32)
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     # r14: serve through the word-memoized Arrow kernel (exact
-    # integer DP replay of the stored table's costs);
-    # SPARK_GRAFT_UNIGRAM_ENCODE=sql restores the in-row fold
+    # integer DP replay of the stored table's costs)
     toks = U.encode_counts(stream, vrows, lmax)
     return run_to_memory(toks, output_mode="append")
 

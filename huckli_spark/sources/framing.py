@@ -24,10 +24,13 @@ import gzip
 import io
 import os
 import struct
-from typing import BinaryIO, Iterable, Iterator
+from typing import TYPE_CHECKING, BinaryIO, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 FRAME_HEADER = struct.Struct(">I")
 
@@ -76,6 +79,26 @@ def iter_frames(stream: BinaryIO, max_frame: int = 64 * 1024 * 1024) -> Iterator
         yield payload
 
 
+def frame_batches(
+    name: str, fh: BinaryIO, batch_rows: int
+) -> Iterator["pd.DataFrame"]:
+    """Frames of ONE decompressed file handle as pandas batches of
+    (file_source, frame_index, payload), at most ``batch_rows`` rows
+    each — the per-file loop of the batch reader (``frames_df``) and
+    the stream (``streaming.ingest.stream_frames``)."""
+    import pandas as pd
+
+    cols = ["file_source", "frame_index", "payload"]
+    rows: list[tuple[str, int, bytes]] = []
+    for i, payload in enumerate(iter_frames(io.BufferedReader(fh, 1 << 20))):
+        rows.append((name, i, payload))
+        if len(rows) >= batch_rows:
+            yield pd.DataFrame(rows, columns=cols)
+            rows = []
+    if rows:
+        yield pd.DataFrame(rows, columns=cols)
+
+
 def open_maybe_gzip(path: str) -> BinaryIO:
     if path.endswith(".gz"):
         return gzip.open(path, "rb")  # type: ignore[return-value]
@@ -99,8 +122,6 @@ def frames_df(
     (``repartition``), each task streaming-decodes its files; Arrow
     batches bound memory to ``batch_rows`` frames.
     """
-    import pandas as pd
-
     files = spark.createDataFrame(
         [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType(), False)])
     )
@@ -110,21 +131,8 @@ def frames_df(
     def decode_files(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for path in pdf["path"]:
-                name = os.path.basename(path)
-                rows: list[tuple[str, int, bytes]] = []
                 with open_maybe_gzip(path) as fh:
-                    buffered = io.BufferedReader(fh, 1 << 20)
-                    for i, payload in enumerate(iter_frames(buffered)):
-                        rows.append((name, i, payload))
-                        if len(rows) >= batch_rows:
-                            yield pd.DataFrame(
-                                rows, columns=["file_source", "frame_index", "payload"]
-                            )
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["file_source", "frame_index", "payload"]
-                    )
+                    yield from frame_batches(os.path.basename(path), fh, batch_rows)
 
     out = files.mapInPandas(decode_files, FRAMES_SCHEMA)
     # Fan frames out past the file count: with fewer files than cores,

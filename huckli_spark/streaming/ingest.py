@@ -33,9 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from huckli_spark.ingest.decode import decode_frames
 from huckli_spark.ingest.filetypes import REGISTRY
-from huckli_spark.sources.framing import FRAMES_SCHEMA, iter_frames
+from huckli_spark.sources.framing import FRAMES_SCHEMA, frame_batches
 
 if TYPE_CHECKING:
+    import pandas as pd
     from pyspark.sql.streaming import StreamingQuery
 
     from huckli_spark.ingest.warehouse import Warehouse
@@ -55,8 +56,6 @@ def stream_frames(
     gzip+4-byte-BE-length frame split (A6) runs inside ``mapInPandas``
     so it scales with the file count, exactly like the batch reader.
     """
-    import pandas as pd
-
     binary_schema = (
         "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
     )
@@ -72,20 +71,8 @@ def stream_frames(
     def split(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(path))
                 fh = gzip.GzipFile(fileobj=io.BytesIO(bytes(content)))
-                rows: list[tuple[str, int, bytes]] = []
-                for i, payload in enumerate(iter_frames(io.BufferedReader(fh))):
-                    rows.append((name, i, payload))
-                    if len(rows) >= batch_rows:
-                        yield pd.DataFrame(
-                            rows, columns=["file_source", "frame_index", "payload"]
-                        )
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["file_source", "frame_index", "payload"]
-                    )
+                yield from frame_batches(os.path.basename(str(path)), fh, batch_rows)
 
     return raw.mapInPandas(split, FRAMES_SCHEMA)
 

@@ -13,6 +13,7 @@ is O(keys x windows-in-horizon), independent of stream length.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -68,8 +69,10 @@ def stage_table_stream(sf_dir: str, table: str, n_files: int = 1) -> str:
     one-file fixture, not of the pipeline (real feeds land many
     objects). Compute-heavy in-stream transforms (the unigram in-row
     DP) stage with n_files ~ cores; row content is identical either
-    way, so gate hashes don't move."""
+    way, so gate hashes don't move. The directory is removed at
+    process exit (the query reading it runs after this returns)."""
     d = tempfile.mkdtemp(prefix=f"stream_{table}_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     src = os.path.join(sf_dir, f"{table}.parquet")
     if n_files <= 1:
         shutil.copy(src, d)

@@ -1,5 +1,5 @@
 """Multimodal column plumbing tests: schema, metadata sniffing,
-decode/feature/resize/frame-sample batch shapes, error tolerance."""
+decode/feature/frame-sample batch shapes, error tolerance."""
 
 from __future__ import annotations
 
@@ -56,14 +56,6 @@ class TestImages:
         assert abs(sum(r0.features[3:]) - 1.0) < 1e-9  # histogram normalized
         # junk blob -> null features, not a task failure (A8 policy)
         assert rows[99].features is None
-
-    def test_resize(self, spark, media_df):
-        out = mm.resize_images(media_df.where("media_id = 0"), 8, 6).collect()[0]
-        arr = mm.decode_image_bytes(bytes(out.data))
-        assert arr.shape == (6, 8, 3)
-        # nearest-neighbor: every output pixel exists in the source
-        src_px = set(map(tuple, _img(0).reshape(-1, 3)))
-        assert set(map(tuple, arr.reshape(-1, 3))) <= src_px
 
 
 class TestVideoAudio:

@@ -105,8 +105,12 @@ def test_contract_queries_run_from_a_foreign_cwd(tmp_path):
     """Each query runs in a fresh SparkContext built with a plain
     ``SparkSession.builder``, from a cwd outside the repo with
     ``PYTHONPATH`` unset, so executors can only import the package
-    from what the registry wrapper ships. The zip is gone at exit."""
+    from what the registry wrapper ships. The zip and the staged
+    stream directories are gone at exit."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env["TMPDIR"] = str(tmpdir)
     script = _SWEEP_SCRIPT.format(root=ROOT, names=SWEEP, sf=SF_SMALL)
     proc = subprocess.run(
         [sys.executable, "-c", script], cwd=tmp_path, env=env,
@@ -119,3 +123,5 @@ def test_contract_queries_run_from_a_foreign_cwd(tmp_path):
     ], "\n".join(ln for ln in lines if ln.startswith("FAIL"))
     zpath = next(ln.split(" ", 1)[1] for ln in lines if ln.startswith("ZIP"))
     assert zpath != "None" and not os.path.exists(zpath)
+    assert os.path.dirname(zpath) == str(tmpdir)
+    assert not [d for d in os.listdir(tmpdir) if d.startswith("stream_")]

@@ -103,6 +103,25 @@ def test_compact_is_snapshot_replace(spark, wh, tmp_path):
     assert wh.table("verified_speedtest_report").count() == before
 
 
+def test_plain_compact_keeps_a_logged_tables_history(spark, tmp_path):
+    # once a table has a log it stays logged: a Warehouse built
+    # without acid=True must compact it through a log commit, not
+    # replace the directory (and its _txlog) wholesale
+    d = str(tmp_path / "wh")
+    acid = Warehouse(spark, d, acid=True)
+    acid.append("t", spark.range(20).withColumn("v", F.col("id") % 3))
+    acid.append("t", spark.range(20, 40).withColumn("v", F.col("id") % 3))
+    before = sorted(tuple(r) for r in acid.table("t").collect())
+    plain = Warehouse(spark, d)
+    plain.compact("t", ["v"], target_partitions=1)
+    log = TransactionLog(plain.table_path("t"))
+    assert log.latest_version() == 2
+    assert log.entries()[-1].get("replace_all")
+    assert sorted(tuple(r) for r in plain.table("t").collect()) == before
+    assert plain.table("t", as_of=0).count() == 20
+    assert sorted(tuple(r) for r in plain.table("t", as_of=1).collect()) == before
+
+
 def test_version_conflict_detection(tmp_path):
     base = str(tmp_path / "t")
     os.makedirs(base)

@@ -233,25 +233,27 @@ class TestEncodeCountsArrow:
         rows += [(None, "nation zzz"), (2**53 + 1, "nation")]
         return spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
 
-    def test_arrow_matches_sql_rows_exactly(self, spark):
-        from huckli_spark.operators.unigram_lm import encode_counts
+    def test_arrow_matches_sql_rows_exactly(self, spark, monkeypatch):
+        from huckli_spark.operators import unigram_lm as U
 
         docs = self._docs(spark)
         vocab = unigram_fit(
             _corpus(spark, RICH), vocab_size=60, n_iters=2
         )
         vrows = [(r.piece, r.cost) for r in vocab.collect()]
-        a = sorted(
-            (tuple(r)
-             for r in encode_counts(docs, vrows, 4, form="arrow").collect()),
-            key=repr,
-        )
-        b = sorted(
-            (tuple(r)
-             for r in encode_counts(docs, vrows, 4, form="sql").collect()),
-            key=repr,
-        )
-        assert a == b and len(a) > 0
+
+        def rows(form):
+            return sorted(
+                (tuple(r)
+                 for r in U.encode_counts(docs, vrows, 4, form=form).collect()),
+                key=repr,
+            )
+
+        b = rows("sql")
+        assert rows("arrow") == b and len(b) > 0
+        # a memo cleared every 2 distinct words recomputes the same rows
+        monkeypatch.setattr(U, "MEMO_CAP", 2)
+        assert rows("arrow") == b
 
     def test_word_ntok_cost_matches_viterbi_local(self):
         from huckli_spark.operators.unigram_lm import (
@@ -463,36 +465,34 @@ class TestOOVPolicy:
 
 
 class TestBroadcastMapServing:
-    """ADVICE/VERDICT r09 #6: the foreachBatch production path — the
-    ONE-ROW broadcast vocab map instead of the baked literal — must
-    be bit-identical to the literal path, including OOV char-fallback
-    and the derived (__vmax) lookback."""
+    """ADVICE/VERDICT r09 #6: the batch serving path (``unigram_encode``,
+    the corpus CLI's encode) ships the vocab as ONE broadcast row
+    instead of a baked literal; its tokens must be bit-identical to the
+    literal path, including OOV char-fallback and the derived
+    (__vmax) lookback the CLI uses."""
 
     def test_broadcast_map_matches_literal(self, spark):
-        from huckli_spark.operators.unigram_lm import (
-            encode_docs_broadcast,
-            tokens_in_row_expr,
-        )
+        from huckli_spark.operators.unigram_lm import tokens_in_row_expr
 
         docs = _corpus(spark, RICH + ["zz unseené chars"])
         vocab = unigram_fit(docs, vocab_size=80, n_iters=2)
         vrows = [(r.piece, r.cost) for r in vocab.collect()]
         lit = {
-            r.doc_id: (list(r.tk.tokens), r.tk.cost_micro)
+            r.doc_id: list(r.tk.tokens)
             for r in docs.select(
                 "doc_id", F.expr(tokens_in_row_expr(vrows, 4)).alias("tk")
             ).collect()
         }
         # explicit lookback
         bc = {
-            r.doc_id: (list(r.tk.tokens), r.tk.cost_micro)
-            for r in encode_docs_broadcast(docs, vocab, 4).collect()
+            r.doc_id: list(r.tokens)
+            for r in unigram_encode(docs, vocab, 4).collect()
         }
         assert bc == lit
         # derived lookback (__vmax == max piece length == 4 here)
         bc_dyn = {
-            r.doc_id: (list(r.tk.tokens), r.tk.cost_micro)
-            for r in encode_docs_broadcast(docs, vocab).collect()
+            r.doc_id: list(r.tokens)
+            for r in unigram_encode(docs, vocab).collect()
         }
         assert bc_dyn == lit
 
@@ -500,88 +500,18 @@ class TestBroadcastMapServing:
         # plan contract: the vocab travels as ONE broadcast row (a
         # BroadcastNestedLoopJoin against a 1-row aggregate is a
         # payload, not a product) and the plan carries NO map literal
-        # (the O(vocab) plan-weight trade this path exists to avoid)
+        # (the O(vocab) plan weight frozen_vocab_expr measures)
         from tests.conftest import SF_SMALL
-
-        from huckli_spark.operators.unigram_lm import encode_docs_broadcast
 
         docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         vocab = unigram_fit(docs, vocab_size=80, n_iters=1)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode\
             .fromString("formatted")
-        plan = encode_docs_broadcast(docs, vocab, 4)._jdf\
+        plan = unigram_encode(docs, vocab, 4)._jdf\
             .queryExecution().explainString(mode)
         assert "Python" not in plan
+        assert "BroadcastNestedLoopJoin" in plan
         marker = next(p for p, _c in [(r.piece, r.cost)
                                       for r in vocab.collect()]
                       if len(p) > 1)
         assert f"keys: [{marker}," not in plan  # no baked map literal
-
-
-class TestEncodeDocsAutoSwitch:
-    """VERDICT r10 #7: ONE serving entry point that picks the plan
-    form itself — the switch must flip exactly at LITERAL_PIECE_BOUND
-    and both arms must stay bit-identical at the boundary."""
-
-    def _encoded(self, df):
-        return {
-            r.doc_id: (list(r.tk.tokens), r.tk.cost_micro)
-            for r in df.select("doc_id", "tk").collect()
-        }
-
-    def test_arms_bit_identical_and_switch_flips_at_bound(
-        self, spark, monkeypatch
-    ):
-        from huckli_spark.operators import unigram_lm as U
-
-        docs = _corpus(spark, RICH + ["zz unseené chars"])
-        vocab = unigram_fit(docs, vocab_size=80, n_iters=2)
-        n = vocab.count()
-
-        lit = self._encoded(U.encode_docs(docs, vocab, plan_form="literal"))
-        bc = self._encoded(U.encode_docs(docs, vocab, plan_form="broadcast"))
-        assert lit == bc and lit
-
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode\
-            .fromString("formatted")
-
-        def plan(df):
-            return df._jdf.queryExecution().explainString(mode)
-
-        marker = next(r.piece for r in vocab.collect() if len(r.piece) > 1)
-        # boundary: n == bound -> literal (vocab baked into the plan)
-        monkeypatch.setattr(U, "LITERAL_PIECE_BOUND", n)
-        at = U.encode_docs(docs, vocab)
-        assert f"{marker}," in plan(at)
-        assert self._encoded(at) == lit
-        # n == bound + 1 ... i.e. bound == n - 1 -> broadcast (one-row
-        # payload, NO baked map literal)
-        monkeypatch.setattr(U, "LITERAL_PIECE_BOUND", n - 1)
-        over = U.encode_docs(docs, vocab)
-        assert f"keys: [{marker}," not in plan(over)
-        assert "BroadcastNestedLoopJoin" in plan(over)
-        assert self._encoded(over) == lit
-
-    def test_rejects_unknown_plan_form(self, spark):
-        import pytest as _pytest
-
-        from huckli_spark.operators import unigram_lm as U
-
-        docs = _corpus(spark, RICH)
-        vocab = unigram_fit(docs, vocab_size=60, n_iters=1)
-        with _pytest.raises(ValueError, match="plan_form"):
-            U.encode_docs(docs, vocab, plan_form="bogus")
-
-    def test_empty_vocab_raises_meaningfully(self, spark):
-        # ADVICE r11 #4: auto routes a 0-row vocab to the literal arm,
-        # where the max-piece-length scan used to die with a bare
-        # "max() arg is an empty sequence"
-        import pytest as _pytest
-
-        from huckli_spark.operators import unigram_lm as U
-
-        docs = _corpus(spark, RICH)
-        empty = spark.createDataFrame([], "piece string, cost long")
-        for form in ("auto", "literal"):
-            with _pytest.raises(ValueError, match="vocab is empty"):
-                U.encode_docs(docs, empty, plan_form=form)

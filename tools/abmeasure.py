@@ -7,8 +7,13 @@ SparkSession, run-by-run (A B A B ...), so slow phases hit both arms
 about equally; the per-pair ratio is the robust statistic.
 
 Usage:
-  python tools/abmeasure.py --env SPARK_GRAFT_DOT_UNROLL --a 0 --b 64 \
+  python tools/abmeasure.py --env NAME --a VALUE_A --b VALUE_B \
       [--sf DIR] [--pairs N] q_x q_y ...
+
+NAME is an environment variable the code under test reads at query
+build time. The set of variables ``huckli_spark`` may read is pinned
+by tests/test_env_knobs.py, so a switch added only for an A/B is
+removed again, or made the one behaviour, before it is merged.
 
 Methodology per run matches bench.py: build + noop write (guide §1.4)
 inside the timer, clearCache between runs.
