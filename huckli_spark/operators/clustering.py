@@ -99,9 +99,7 @@ def _flat_cents_onerow(spark, cents: list[list[int]]):
     return cent_df.agg(F.collect_list(F.struct("cid", "cv")).alias("__cents"))
 
 
-def _flat_use_broadcast(cents: list[list[int]], plan_form: str) -> bool:
-    if plan_form in ("literal", "broadcast"):
-        return plan_form == "broadcast"
+def _flat_use_broadcast(cents: list[list[int]]) -> bool:
     return len(cents) * len(cents[0]) > LITERAL_CELL_BOUND
 
 
@@ -111,18 +109,17 @@ def kmeans_fit(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    plan_form: str = "auto",
 ) -> list[list[int]]:
     """Train k centroids (micro fixed-point ints). Init = the k
     lowest-id vectors (deterministic; any seeding works — production
     would use k-means|| — the ARITHMETIC is what must be portable).
 
-    ``plan_form``: 'literal' bakes centroids into the per-iteration
-    assignment expression (fastest at small k*dim), 'broadcast' ships
-    them as data (plan O(1) — the SemDeDup paper's k~100k regime would
-    otherwise build a 6M-literal expression per iteration), 'auto'
-    switches on LITERAL_CELL_BOUND. Bit-identical either way (pinned
-    in tests/test_clustering.py)."""
+    Plan form by size: up to LITERAL_CELL_BOUND k*dim cells the
+    centroids are baked into the per-iteration assignment expression
+    (fastest at small k*dim); past it they ship as data (plan O(1) —
+    the SemDeDup paper's k~100k regime would otherwise build a
+    6M-literal expression per iteration). Bit-identical either way
+    (pinned in tests/test_clustering.py)."""
     spark = df.sparkSession
     vm = df.select(F.col(id_col), F.expr(_vm_expr(vec_col)).alias("__vm"))
     vm = vm.persist()
@@ -138,7 +135,7 @@ def kmeans_fit(
             f"{len(cents)} row(s); supply k <= corpus size"
         )
     dim = len(cents[0])
-    bcast = _flat_use_broadcast(cents, plan_form)
+    bcast = _flat_use_broadcast(cents)
     try:
         for _ in range(iterations):
             # update via `dim` per-dimension sum aggregates on the
@@ -186,12 +183,11 @@ def kmeans_assign(
     cents: list[list[int]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    plan_form: str = "auto",
 ) -> DataFrame:
     """(id, cid): map-only exact-integer assignment. Delegates to
     ``kmeans_assign_join`` (codebook as a broadcast payload, plan
     O(1)) when k*dim exceeds LITERAL_CELL_BOUND — identical output."""
-    if _flat_use_broadcast(cents, plan_form):
+    if _flat_use_broadcast(cents):
         return kmeans_assign_join(df, cents, id_col, vec_col)
     return df.select(
         F.col(id_col), F.expr(_vm_expr(vec_col)).alias("__vm")
@@ -240,9 +236,7 @@ def _grouped_cents_onerow(spark, cents: dict[int, list[list[int]]]):
     ).agg(F.collect_list(F.struct("g", "cid", "cv")).alias("__cents"))
 
 
-def _use_broadcast(cents: dict[int, list[list[int]]], plan_form: str) -> bool:
-    if plan_form in ("literal", "broadcast"):
-        return plan_form == "broadcast"
+def _use_broadcast(cents: dict[int, list[list[int]]]) -> bool:
     cells = sum(len(cs) * len(cs[0]) for cs in cents.values())
     return cells > GROUPED_LITERAL_CELL_BOUND
 
@@ -254,7 +248,6 @@ def kmeans_fit_grouped(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     group_col: str = "cid",
-    plan_form: str = "auto",
 ) -> dict[int, list[list[int]]]:
     """Train an independent k-means PER GROUP in shared Spark jobs —
     the de-serialized form of ``for g in groups: kmeans_fit(...)``
@@ -264,12 +257,12 @@ def kmeans_fit_grouped(
     ``iterations + 1`` job waves total regardless of the number of
     groups, instead of ``n_groups * (iterations + 1)``.
 
-    ``plan_form``: 'literal' bakes the centroids into a CASE of
-    ``_assign_expr``s (fastest at small geometry), 'broadcast' ships
-    them as one broadcast array<struct<g,cid,cv>> row with an in-row
-    filter+argmin (plan size O(1) — required when n_groups is in the
-    hundreds, where the literal plan alone is n_groups*k*dim cells),
-    'auto' switches on GROUPED_LITERAL_CELL_BOUND. Both forms use the
+    Plan form by size: up to GROUPED_LITERAL_CELL_BOUND centroid cells
+    the centroids are baked into a CASE of ``_assign_expr``s (fastest
+    at small geometry); past it they ship as one broadcast
+    array<struct<g,cid,cv>> row with an in-row filter+argmin (plan
+    size O(1) — required when n_groups is in the hundreds, where the
+    literal plan alone is n_groups*k*dim cells). Both forms use the
     exact integer arithmetic of ``_assign_expr`` and are bit-identical
     (pinned in tests/test_curation.py).
 
@@ -317,7 +310,7 @@ def kmeans_fit_grouped(
         if not cents:
             raise ValueError("kmeans_fit_grouped: empty input")
         dim = len(next(iter(cents.values()))[0])
-        bcast = _use_broadcast(cents, plan_form)
+        bcast = _use_broadcast(cents)
         for _ in range(iterations):
             if bcast:
                 assigned = vm.crossJoin(
@@ -359,19 +352,18 @@ def kmeans_assign_grouped(
     vec_col: str = "embedding",
     group_col: str = "cid",
     out_col: str = "sub_cid",
-    plan_form: str = "auto",
 ) -> DataFrame:
     """(id, group, sub-assignment): one MAP-ONLY pass assigning every
     row against its own group's centroids — the grouped twin of
-    ``kmeans_assign`` / ``kmeans_assign_join`` (same ``plan_form``
-    trade as the grouped trainer; the broadcast form's crossJoin is a
+    ``kmeans_assign`` / ``kmeans_assign_join`` (same size switch as
+    the grouped trainer; the broadcast form's crossJoin is a
     broadcast of ONE row, still zero shuffle)."""
     vm = df.select(
         F.col(id_col),
         F.col(group_col),
         F.expr(_vm_expr(vec_col)).alias("__vm"),
     )
-    if _use_broadcast(cents, plan_form):
+    if _use_broadcast(cents):
         onerow = _grouped_cents_onerow(df.sparkSession, cents)
         expr = _GROUPED_BCAST_ASSIGN.replace("c.g = __g", f"c.g = {group_col}")
         return vm.crossJoin(F.broadcast(onerow)).select(

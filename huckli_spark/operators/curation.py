@@ -41,13 +41,6 @@ from huckli_spark.operators.clustering import kmeans_assign, kmeans_fit
 from huckli_spark.operators.simsearch import cosine, dot, l2_norm
 
 DSIR_BUCKETS = 256
-MICRO = 1_000_000
-
-
-def _micro(col: F.Column) -> F.Column:
-    """floor(x * 1e6 + 0.5) as BIGINT — the portable fixed-point cast
-    (identical for negative values in Spark and DuckDB: both floor)."""
-    return F.floor(col * F.lit(float(MICRO)) + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -215,7 +208,6 @@ def dsir_select(
     keep: int = 100,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """DSIR importance weights + top-``keep`` selection:
     (doc_id, n_feats, w_micro, selected).
@@ -226,22 +218,18 @@ def dsir_select(
     micro-nats once, then per-doc weights are integer dot products of
     (bucket count x micro log-ratio) — partition-order free.
 
-    Scale: one explode over the corpus, ONE map-combined groupBy down
-    to B=256 bucket rows (conditional sums fold target and raw counts
-    in the same pass), a broadcast of those 256 rows back onto the
-    per-doc feature counts, and a broadcast scalar threshold from a
-    TakeOrdered top-``keep`` (per-partition top-k + driver merge — no
-    global sort shuffle). The corpus is scanned twice (features,
-    scoring join) and never reshuffled on a data-sized key. At 100 TB
-    ``keep`` becomes a weight-quantile threshold.
-
-    ``materialize`` (default) persists the doc-sized ``weights``
-    relation before thresholding and eager-releases the result (the
-    operators.cache lifecycle) so the corpus explodes ONCE; pass
-    ``materialize=False`` to get the lazy plan (used by the plan-shape
-    tests) — it re-derives weights inside the threshold branch,
-    doubling the corpus scans.
+    Scale: one explode over the corpus into per-(doc, bucket) counts
+    (persisted — the corpus collapses to <= B rows per doc there), ONE
+    map-combined groupBy down to B=256 bucket rows collected in the
+    job that fills the cache, a broadcast of the B-row log-ratio table
+    back onto the per-doc counts, and a driver-side TakeOrdered
+    top-``keep`` collect for the threshold (per-partition top-k +
+    driver merge — no global sort shuffle). The result is
+    eager-released (the operators.cache lifecycle); the corpus is
+    never reshuffled on a data-sized key. At 100 TB ``keep`` becomes a
+    weight-quantile threshold.
     """
+    from huckli_spark.operators.cache import eager_release, persist_scope
     from huckli_spark.operators.parallel import exploded, fan_out
 
     # fan_out: the n-gram explode + per-feature h60 below is the
@@ -267,75 +255,19 @@ def dsir_select(
         .groupBy(id_col, "__is_t", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
-    byb = feats.groupBy("bucket").agg(
-        F.sum("cnt").alias("rc"),
-        F.sum(F.when(F.col("__is_t"), F.col("cnt")).otherwise(0)).alias("tc"),
-    )
-    totals = byb.agg(
-        F.sum("rc").alias("rt"), F.sum("tc").alias("tt")
-    )
-    lr = (
-        byb.crossJoin(F.broadcast(totals))
-        .select(
-            "bucket",
-            _micro(
-                F.log((F.col("tc") + 1.0) / (F.col("tt") + F.lit(buckets)))
-                - F.log((F.col("rc") + 1.0) / (F.col("rt") + F.lit(buckets)))
-            ).alias("lr_micro"),
-        )
-    )
-    weights = (
-        feats.join(F.broadcast(lr), "bucket")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("n_feats"),
-            F.sum(F.col("cnt") * F.col("lr_micro")).cast("long").alias(
-                "w_micro"
-            ),
-        )
-    )
-    def _flagged(w: DataFrame) -> DataFrame:
-        # threshold = last row of the (w desc, id asc) top-`keep`
-        # prefix: TakeOrderedAndProject both ways, never a full sort.
-        thr = (
-            w.orderBy(F.desc("w_micro"), F.asc(id_col))
-            .limit(keep)
-            .orderBy(F.asc("w_micro"), F.desc(id_col))
-            .limit(1)
-            .select(
-                F.col("w_micro").alias("__tw"), F.col(id_col).alias("__tid")
-            )
-        )
-        return w.crossJoin(F.broadcast(thr)).select(
-            F.col(id_col),
-            "n_feats",
-            "w_micro",
-            (
-                (F.col("w_micro") > F.col("__tw"))
-                | (
-                    (F.col("w_micro") == F.col("__tw"))
-                    & (F.col(id_col) <= F.col("__tid"))
-                )
-            ).alias("selected"),
-        )
+    # empty corpus or keep <= 0: zero rows in the result's schema
+    no_rows = feats.select(
+        F.col(id_col),
+        F.lit(None).cast("long").alias("n_feats"),
+        F.lit(None).cast("long").alias("w_micro"),
+        F.lit(None).cast("boolean").alias("selected"),
+    ).where(F.lit(False))
 
-    if not materialize:
-        return _flagged(weights)
-
-    # r14 materialized form: one corpus explode, two jobs, one release.
-    # The lazy plan above derives `feats` once per reference (byb
-    # branch + scoring join — 12 parquet scans / 12 Generates in the
-    # static plan, no ReusedExchange), and the broadcast-threshold
-    # lifecycle spent two TakeOrdered legs inside a broadcast build.
-    # Instead: persist `feats` (the corpus collapses to <= B rows/doc
-    # there), collect the B-row bucket table in the SAME job that
-    # fills the cache, re-enter the log-ratio as a VALUES literal
-    # with ln/floor STILL evaluated by Spark SQL (bit-identical
-    # micro-nats — the unigram-fit r13 discipline), and take the
-    # keep-threshold with ONE driver-side TakeOrdered collect (the
-    # identical (w desc, id asc) top-`keep` cut; keep-bounded rows).
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
+    # The log-ratio re-enters as a VALUES literal with ln/floor STILL
+    # evaluated by Spark SQL (bit-identical micro-nats — the
+    # unigram-fit r13 discipline); the keep-threshold is ONE
+    # driver-side TakeOrdered collect of the (w desc, id asc)
+    # top-`keep` cut (keep-bounded rows).
     spark = docs.sparkSession
     with persist_scope() as s:
         feats_p = s.persist(feats)
@@ -346,9 +278,7 @@ def dsir_select(
             ).alias("tc"),
         ).collect()
         if not brows:
-            # empty corpus: the lazy form's crossJoin with an empty
-            # threshold row yields zero rows — agree exactly
-            return _flagged(weights).where(F.lit(False))
+            return no_rows
         rt = sum(int(r["rc"]) for r in brows)   # == F.sum long, exact
         tt = sum(int(r["tc"]) for r in brows)
         vals = ", ".join(
@@ -376,7 +306,7 @@ def dsir_select(
             w.orderBy(F.desc("w_micro"), F.asc(id_col)).limit(keep).collect()
         )
         if not top:
-            return _flagged(weights).where(F.lit(False))
+            return no_rows
         # the last top-`keep` row under (w desc, id asc) — computed
         # order-insensitively over the collected prefix
         tw = min(int(r["w_micro"]) for r in top)
@@ -1124,7 +1054,6 @@ def mine_triplets(
     tau_micro: int = 450_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     pair_form: str = "arrow",
     max_block_cells: int = 1 << 22,
 ) -> DataFrame:
@@ -1143,14 +1072,7 @@ def mine_triplets(
     map-side instead of twice window-sorted and self-joined. Scale:
     pairs key on cid only (cluster-bounded, the SemDeDup discipline —
     scale k with the corpus to hold cluster geometry constant; probed
-    in SCALE_PROBE_triplets.json), output is O(n). The membered
-    relation (id, cid, vec, norm) is PERSISTED across the self-join —
-    without it each side re-runs the assignment + embedding join
-    (measured 2.29x -> 1.93x wall ratio at the 10x probe) — released
-    via eager_release (the cache-discipline contract).
-    ``materialize=False`` returns the fully lazy plan (no persist, no
-    spill) for plan inspection — the plan-pin hook, as in
-    simsearch.cosine_pairs_lsh.
+    in SCALE_PROBE_triplets.json), output is O(n).
 
     ``pair_form='arrow'`` (default, r13) runs the within-cluster pair
     scan as a per-cluster NumPy kernel (``applyInPandas`` keyed on
@@ -1159,10 +1081,11 @@ def mine_triplets(
     ``_triplet_picks_arrow``), the corpus ships ONCE per side instead
     of exploding into the O(n x cluster) pair relation, and no
     persist/scratch boundary is needed at all — measured 7.2 -> ~2 s
-    at sf0.1, hash-identical output. ``'sql'`` keeps the relational
-    formulation (requires numeric ids either way; the struct-max
+    at sf0.1, hash-identical output. ``'sql'`` is kept only as the
+    relational reference the Arrow kernel is tested against; it
+    returns its plan lazily (no persist, so each self-join side
+    re-runs the assignment). Both need numeric ids (the struct-max
     trick negates ids)."""
-    from huckli_spark.operators.cache import eager_release
     from huckli_spark.operators.clustering import kmeans_assign, kmeans_fit
     from huckli_spark.operators.simsearch import dot, l2_norm
 
@@ -1186,8 +1109,6 @@ def mine_triplets(
         F.col(id_col), "cid", F.col(vec_col),
         l2_norm(vec_col).alias("nrm"),
     )
-    if materialize:
-        m = m.persist()
     a = m.select(
         F.col(id_col).alias("anchor"), "cid",
         F.col(vec_col).alias("__ea"), F.col("nrm").alias("__na"),
@@ -1210,7 +1131,7 @@ def mine_triplets(
     best = pairs.groupBy("anchor").agg(
         pick(is_pos).alias("p"), pick(~is_pos).alias("n")
     )
-    out = best.where(
+    return best.where(
         F.col("p").isNotNull() & F.col("n").isNotNull()
     ).select(
         "anchor",
@@ -1219,4 +1140,3 @@ def mine_triplets(
         F.col("p.sim_micro").alias("pos_sim_micro"),
         F.col("n.sim_micro").alias("neg_sim_micro"),
     )
-    return eager_release(out, m) if materialize else out

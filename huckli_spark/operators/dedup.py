@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from huckli_spark.functions.portable import fround
+from huckli_spark.operators.cache import eager_unless_scoped
 from huckli_spark.operators.parallel import exploded, fan_out, pos_exploded
 
 
@@ -92,6 +93,7 @@ def shingles(
     )
 
 
+@eager_unless_scoped
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -99,7 +101,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: Optional[int] = None,
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """All document pairs with word-n-gram Jaccard >= threshold.
@@ -110,32 +111,19 @@ def jaccard_pairs(
     for oracle parity on the small fixtures).
 
     Returns (d1, d2, jaccard) with d1 < d2, jaccard rounded portably.
-    Cache lifecycle (operators.cache): default = compute eagerly and
-    release internal caches before returning; pass ``scope`` (a
-    persist_scope) for a lazy result with caller-controlled release;
-    ``materialize=False`` without a scope builds a cache-free lazy
-    plan (recompute semantics — also what plan tests inspect).
+    Cache lifecycle as in operators.cache: eager unless the caller
+    passes ``scope``.
     """
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
     inter, s1, s2 = _shingle_intersections(
-        df, id_col, text_col, n, max_doc_freq, reg
+        df, id_col, text_col, n, max_doc_freq, scope.persist
     )
     jac = F.col("n_common") * 1.0 / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    out = (
+    return (
         inter.join(s1, "d1")
         .join(s2, "d2")
         .where(jac >= threshold)
         .select("d1", "d2", fround(jac, 4).alias("jaccard"))
     )
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
 
 
 def _shingle_intersections(
@@ -144,7 +132,7 @@ def _shingle_intersections(
     text_col: str,
     n: int,
     max_doc_freq: Optional[int],
-    reg,
+    persist,
 ):
     """Shared skeleton of the set-overlap dedup family: per-doc
     distinct shingles -> pairwise intersection counts + per-side set
@@ -153,7 +141,7 @@ def _shingle_intersections(
 
     # the array relation feeds sizes + both intersection join sides —
     # persist so split/transform/array_distinct runs once per doc
-    docs = reg(shingle_array(df, id_col, text_col, n=n))
+    docs = persist(shingle_array(df, id_col, text_col, n=n))
     # join on the 60-bit shingle hash, not the string: 8-byte shuffle
     # keys instead of ~20-byte text, cheaper comparisons, identical
     # results — the oracle hashes with the same portable h60, so the
@@ -166,7 +154,7 @@ def _shingle_intersections(
         sh = sh.join(
             freq.where(F.col("__df") <= max_doc_freq), "shingle", "inner"
         ).drop("__df")
-        sh = reg(sh)  # feeds sizes + both join sides below
+        sh = persist(sh)  # feeds sizes + both join sides below
         sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     else:
         # per-doc shingle count is document-local: no shuffle
@@ -190,6 +178,7 @@ def _shingle_intersections(
     return inter, s1, s2
 
 
+@eager_unless_scoped
 def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -197,7 +186,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: Optional[int] = None,
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: document pairs where either
@@ -212,16 +200,12 @@ def containment_pairs(
     Same inverted-index skeleton, cost profile and ``max_doc_freq``
     skew guard as ``jaccard_pairs`` — one extra join column, no new
     shuffle."""
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
     inter, s1, s2 = _shingle_intersections(
-        df, id_col, text_col, n, max_doc_freq, reg
+        df, id_col, text_col, n, max_doc_freq, scope.persist
     )
     c12 = F.col("n_common") * 1.0 / F.col("n1")
     c21 = F.col("n_common") * 1.0 / F.col("n2")
-    out = (
+    return (
         inter.join(s1, "d1")
         .join(s2, "d2")
         .where(F.greatest(c12, c21) >= threshold)
@@ -232,14 +216,9 @@ def containment_pairs(
             fround(c21, 4).alias("cont_2_in_1"),
         )
     )
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
 
 
+@eager_unless_scoped
 def jaccard_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -248,7 +227,6 @@ def jaccard_pairs_cross(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: Optional[int] = None,
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """Incremental near-dup detection: pairs (new_id, corpus_id,
@@ -266,12 +244,8 @@ def jaccard_pairs_cross(
     skewed side).
     """
     from huckli_spark.functions.portable import h60
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
-    new_docs = reg(shingle_array(new_df, id_col, text_col, n=n))
-    corp_docs = reg(shingle_array(corpus_df, id_col, text_col, n=n))
+    new_docs = scope.persist(shingle_array(new_df, id_col, text_col, n=n))
+    corp_docs = scope.persist(shingle_array(corpus_df, id_col, text_col, n=n))
 
     def _sh(docs: DataFrame, alias: str) -> DataFrame:
         return exploded(
@@ -282,10 +256,16 @@ def jaccard_pairs_cross(
     corp_sh = _sh(corp_docs, "d_corpus")
     if max_doc_freq is not None:
         freq = corp_sh.groupBy("shingle").agg(F.count("*").alias("__df"))
-        stop = reg(freq.where(F.col("__df") > max_doc_freq).select("shingle"))
+        stop = scope.persist(
+            freq.where(F.col("__df") > max_doc_freq).select("shingle")
+        )
         # filtered relations feed sizes AND the intersection join
-        corp_sh = reg(corp_sh.join(F.broadcast(stop), "shingle", "left_anti"))
-        new_sh = reg(new_sh.join(F.broadcast(stop), "shingle", "left_anti"))
+        corp_sh = scope.persist(
+            corp_sh.join(F.broadcast(stop), "shingle", "left_anti")
+        )
+        new_sh = scope.persist(
+            new_sh.join(F.broadcast(stop), "shingle", "left_anti")
+        )
         corp_sizes = corp_sh.groupBy("d_corpus").agg(F.count("*").alias("n2"))
         new_sizes = new_sh.groupBy("d_new").agg(F.count("*").alias("n1"))
     else:
@@ -305,17 +285,11 @@ def jaccard_pairs_cross(
     # corpus-sizes join — joining the other way round would shuffle
     # one row per corpus document to serve a handful of candidates
     cand_n1 = inter.join(F.broadcast(new_sizes), "d_new")
-    out = (
+    return (
         corp_sizes.join(F.broadcast(cand_n1), "d_corpus")
         .where(jac >= threshold)
         .select("d_new", "d_corpus", fround(jac, 4).alias("jaccard"))
     )
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
 
 
 def connected_components(

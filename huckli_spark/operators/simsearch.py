@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from huckli_spark.functions import vecfold
 from huckli_spark.functions.portable import fround
+from huckli_spark.operators.cache import eager_unless_scoped
 from huckli_spark.operators.parallel import fan_out
 
 
@@ -435,6 +436,7 @@ def lsh_band_sigs(
     return df.select(F.col(id_col), *cols)
 
 
+@eager_unless_scoped
 def cosine_pairs_lsh(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -444,7 +446,6 @@ def cosine_pairs_lsh(
     planes_per_band: int = LSH_PAIR_PLANES_PER_BAND,
     dim: int = 64,
     seed: str = "huckli",
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """Scale path for :func:`cosine_pairs`: banded random-hyperplane
@@ -462,15 +463,10 @@ def cosine_pairs_lsh(
     (see LSH_PAIR_BANDS note); the oracle re-derives identical planes
     so the probabilistic structure itself is hash-gated.
     Cache lifecycle as in operators.cache: both self-join sides read
-    the signature relation, so it is persisted and released (eager by
-    default; pass scope for a lazy plan, materialize=False for a
-    cache-free plan).
+    the signature relation, so it is persisted through ``scope`` (eager
+    unless the caller passes one).
     """
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
-    sig = reg(
+    sig = scope.persist(
         lsh_band_sigs(df, id_col, vec_col, n_bands, planes_per_band, dim, seed)
     )
     entries = [
@@ -512,7 +508,7 @@ def cosine_pairs_lsh(
         F.col(id_col).alias("d2"), F.col(vec_col).alias("__b"),
         l2_norm(vec_col).alias("__nb"),
     )
-    out = (
+    return (
         cand.join(v1, "d1")
         .join(v2, "d2")
         .withColumn(
@@ -522,12 +518,6 @@ def cosine_pairs_lsh(
         .where(F.col("cos_sim") >= threshold)
         .select("d1", "d2", "cos_sim")
     )
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from huckli_spark.functions.portable import fround
+from huckli_spark.operators.cache import eager_release, eager_unless_scoped
 from huckli_spark.operators.dedup import shingle_array
 from huckli_spark.operators.parallel import exploded, fan_out
 
@@ -151,35 +152,27 @@ def _candidates_from_bands(bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+@eager_unless_scoped
 def minhash_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """Distinct candidate pairs (d1 < d2) sharing any LSH band bucket.
-    Cache lifecycle as in operators.cache (eager by default)."""
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
-    bands = reg(minhash_bands(minhash_signature(df, id_col, text_col, n), id_col))
-    cand = _candidates_from_bands(bands, id_col)
-    if scope is not None or not materialize:
-        return cand
-    try:
-        return eager_release(cand)
-    finally:
-        s.release()
+    Cache lifecycle as in operators.cache (eager unless scoped)."""
+    bands = scope.persist(
+        minhash_bands(minhash_signature(df, id_col, text_col, n), id_col)
+    )
+    return _candidates_from_bands(bands, id_col)
 
 
 def _exact_jaccard_for_candidates(
     docs: DataFrame,
     cand: DataFrame,
     id_col: str,
-    reg,
+    persist,
     threshold: "float | None" = None,
 ) -> DataFrame:
     """(d1, d2, jaccard) — exact Jaccard for candidate pairs only,
@@ -195,7 +188,7 @@ def _exact_jaccard_for_candidates(
     cand_ids = cand.select(F.col("d1").alias(id_col)).union(
         cand.select(F.col("d2").alias(id_col))
     ).distinct()
-    sh_c = reg(
+    sh_c = persist(
         exploded(
             docs.join(F.broadcast(cand_ids), id_col, "left_semi"),
             [F.col(id_col)], "sh_arr", "shingle",
@@ -219,45 +212,37 @@ def _exact_jaccard_for_candidates(
     return joined.select("d1", "d2", fround(jac, 4).alias("jaccard"))
 
 
+@eager_unless_scoped
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.9,
-    materialize: bool = True,
     scope=None,
     fast_hash: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pipeline: candidates from band buckets,
     then exact-Jaccard verification restricted to candidates.
     Returns (d1, d2, jaccard) with jaccard >= threshold.
-    Cache lifecycle as in operators.cache (eager by default)."""
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
+    Cache lifecycle as in operators.cache (eager unless scoped)."""
     # one shared (id, shingle-array) relation: signatures, sizes, and
     # verification all derive from it document-locally
-    docs = reg(shingle_array(df, id_col, text_col, n=n))
+    docs = scope.persist(shingle_array(df, id_col, text_col, n=n))
     sig = _signature_from_arrays(docs, id_col, fast_hash=fast_hash)
-    bands = reg(minhash_bands(sig, id_col))
-    cand = reg(_candidates_from_bands(bands, id_col))
-    out = _exact_jaccard_for_candidates(docs, cand, id_col, reg, threshold=threshold)
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
+    bands = scope.persist(minhash_bands(sig, id_col))
+    cand = scope.persist(_candidates_from_bands(bands, id_col))
+    return _exact_jaccard_for_candidates(
+        docs, cand, id_col, scope.persist, threshold=threshold
+    )
 
 
+@eager_unless_scoped
 def minhash_estimate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    materialize: bool = True,
     scope=None,
 ) -> DataFrame:
     """Estimated AND exact Jaccard for every LSH candidate pair:
@@ -269,14 +254,10 @@ def minhash_estimate_pairs(
 
     Scale: identical to minhash_dedup_pairs minus the threshold — the
     estimate join touches only (candidate, K-component) rows."""
-    from huckli_spark.operators.cache import eager_release, persist_scope
-
-    s = scope if scope is not None else (persist_scope() if materialize else None)
-    reg = s.persist if s is not None else (lambda d: d)
-    docs = reg(shingle_array(df, id_col, text_col, n=n))
-    sig = reg(_signature_from_arrays(docs, id_col))
-    bands = reg(minhash_bands(sig, id_col))
-    cand = reg(_candidates_from_bands(bands, id_col))
+    docs = scope.persist(shingle_array(df, id_col, text_col, n=n))
+    sig = scope.persist(_signature_from_arrays(docs, id_col))
+    bands = scope.persist(minhash_bands(sig, id_col))
+    cand = scope.persist(_candidates_from_bands(bands, id_col))
 
     agree = sum(
         F.when(F.col(f"__a{k}") == F.col(f"__b{k}"), 1).otherwise(0)
@@ -293,23 +274,14 @@ def minhash_estimate_pairs(
         .join(s2, "d2")
         .select("d1", "d2", fround(agree / F.lit(float(MINHASH_K)), 4).alias("est_jaccard"))
     )
-    exact = _exact_jaccard_for_candidates(docs, cand, id_col, reg)
+    exact = _exact_jaccard_for_candidates(docs, cand, id_col, scope.persist)
     # candidates with zero shingle overlap (band collision) get 0.0
-    out = (
-        est.join(exact, ["d1", "d2"], "left")
-        .select(
-            "d1",
-            "d2",
-            "est_jaccard",
-            F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jaccard"),
-        )
+    return est.join(exact, ["d1", "d2"], "left").select(
+        "d1",
+        "d2",
+        "est_jaccard",
+        F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jaccard"),
     )
-    if scope is not None or not materialize:
-        return out
-    try:
-        return eager_release(out)
-    finally:
-        s.release()
 
 
 # ---------------------------------------------------------------------------
@@ -363,7 +335,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    checkpoint_sig: bool = True,
 ) -> DataFrame:
     """Pairs within Hamming distance ``max_hamming``, via exact
     pigeonhole banding: 4 chunks of 15 bits — any pair with <= 3
@@ -381,12 +352,10 @@ def simhash_pairs(
     its blocks pin the block manager until the plan is GC'd, so five
     sequential builds grew getPersistentRDDs 3 -> 8 — the scratch
     round trip is the leak-free form (test_cache_discipline pins it).
-    ``checkpoint_sig=False`` opts out where the extra scratch I/O is
-    worse than recompute (e.g. remote-only scratch)."""
+    A streaming input keeps the lazy signature (a stream cannot be
+    written to scratch mid-plan)."""
     sig = simhash(df, id_col, text_col)
-    if checkpoint_sig and not df.isStreaming:
-        from huckli_spark.operators.cache import eager_release
-
+    if not df.isStreaming:
         sig = eager_release(sig)
     return simhash_pairs_from_signatures(sig, id_col, max_hamming)
 

@@ -274,10 +274,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     pool = docs.join(qdocs, "doc_id")
-    # lazy form: the pipeline's composed plan stays inspectable and
-    # the surviving pool is small enough that the threshold branch's
-    # re-derivation is cheap
-    return dsir_select(pool, _dsir_target(), keep=50, materialize=False)
+    return dsir_select(pool, _dsir_target(), keep=50)
 
 
 @query(

@@ -894,11 +894,8 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from huckli_spark.operators.curation import (
-        DSIR_BUCKETS,
-        MICRO,
-        _feature_col,
-    )
+    from huckli_spark.operators.clustering import MICRO
+    from huckli_spark.operators.curation import DSIR_BUCKETS, _feature_col
     from huckli_spark.functions.portable import h60
     from huckli_spark.streaming.windows import run_to_memory
 

@@ -40,7 +40,6 @@ _SLOW_FILES = {
     "test_cache_discipline.py",
     "test_all_filetypes.py",
     "test_mixture.py",
-    "test_txlog.py",
     "test_corpus_cli.py",
 }
 # individual heavy tests/classes (>5 s each, measured r14 full run);
@@ -65,6 +64,13 @@ _SLOW_NODES = (
     "test_retrieval.py::TestHybridRecallFloor",
     "test_simsearch_arrow.py::TestProductQuantization::test_adc_is_partitioning_invariant",
     "test_curation.py::TestSemDeDupTwoLevel::test_grouped_training_bit_identical_to_sequential_loop",
+    "test_txlog.py::test_commit_then_read",
+    "test_txlog.py::TestPointInTimeLookup::test_every_version_cell_exercised",
+    "test_txlog.py::TestSCD2::test_history_accumulates",
+    "test_txlog.py::TestChangeDataFeed::test_roundtrip_feed_reproduces_snapshot",
+    "test_txlog.py::TestChangeDataFeed::test_diff_classifies_iud",
+    "test_txlog.py::test_time_travel_reads_past_versions",
+    "test_txlog.py::TestMergeUpsert::test_apply_cdc_idempotent",
 )
 
 

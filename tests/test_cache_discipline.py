@@ -26,20 +26,38 @@ def _cache_manager_empty(spark) -> bool:
 
 
 def test_operators_release_their_caches(spark, docs):
-    from huckli_spark.operators.dedup import jaccard_pairs
+    import os
+
+    from pyspark.sql import functions as F
+
+    from huckli_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+        jaccard_pairs_cross,
+    )
+    from huckli_spark.operators.simsearch import cosine_pairs_lsh
     from huckli_spark.operators.sketch import (
         minhash_candidates,
         minhash_dedup_pairs,
+        minhash_estimate_pairs,
         simhash_pairs,
     )
 
+    emb = spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
+    new = docs.where(F.col("doc_id") % 10 == 0)
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
     spark.catalog.clearCache()
     for _ in range(3):
         jaccard_pairs(docs).collect()
         jaccard_pairs(docs, max_doc_freq=8).collect()
+        containment_pairs(docs).collect()
+        jaccard_pairs_cross(new, corpus).collect()
+        jaccard_pairs_cross(new, corpus, max_doc_freq=8).collect()
         minhash_candidates(docs).collect()
         minhash_dedup_pairs(docs, threshold=0.9).collect()
+        minhash_estimate_pairs(docs).collect()
         simhash_pairs(docs, max_hamming=3).collect()
+        cosine_pairs_lsh(emb, threshold=0.45).collect()
     # every df.persist() taken inside the operators must be released:
     # the CacheManager registers persisted plans deterministically at
     # persist() time, so emptiness here == zero leaked caches

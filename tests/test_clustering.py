@@ -193,13 +193,15 @@ class TestAssignJoinVariant:
              for r in ss.ivf_assign_join(df, cents, nprobe=2).collect()}
         assert a == b
 
-    def test_fit_broadcast_form_bit_identical(self, spark):
+    def test_fit_broadcast_form_bit_identical(self, spark, monkeypatch):
         # TRAINING with the codebook-as-data plan form (required at
         # the k~100k regime where a literal assignment expression is
-        # millions of plan nodes) must produce the identical centroids
+        # millions of plan nodes) must produce the identical centroids;
+        # a zero cell bound forces the broadcast form on a small k
         df = _clustered(spark, n_clusters=4, per=30, seed=11)
-        lit = km.kmeans_fit(df, k=4, iterations=3, plan_form="literal")
-        bc = km.kmeans_fit(df, k=4, iterations=3, plan_form="broadcast")
+        lit = km.kmeans_fit(df, k=4, iterations=3)
+        monkeypatch.setattr(km, "LITERAL_CELL_BOUND", 0)
+        bc = km.kmeans_fit(df, k=4, iterations=3)
         assert lit == bc
 
     def test_assign_auto_delegates_above_cell_bound(self, spark):

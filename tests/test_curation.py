@@ -158,6 +158,21 @@ class TestDSIR:
         }
         assert rows[0] == 1 and rows[1] == 3
 
+    def test_empty_corpus_and_zero_keep_keep_the_schema(self, spark):
+        docs = _docs(spark, [("alpha beta", "en"), ("gamma", "xx")])
+        want = [
+            ("doc_id", "bigint"),
+            ("n_feats", "bigint"),
+            ("w_micro", "bigint"),
+            ("selected", "boolean"),
+        ]
+        for d, keep in ((docs.where(F.lit(False)), 1), (docs, 0)):
+            out = dsir_select(d, F.col("lang") == "en", keep=keep)
+            assert [
+                (f.name, f.dataType.simpleString()) for f in out.schema
+            ] == want
+            assert out.count() == 0
+
 
 class TestGopherRules:
     def _docs(self, spark, rows):
@@ -408,10 +423,14 @@ class TestSemDeDupTwoLevel:
             )
             assert grouped[g] == seq, f"group {g} centroids diverge"
 
-    def test_grouped_kmeans_broadcast_form_bit_identical(self, spark):
+    def test_grouped_kmeans_broadcast_form_bit_identical(
+        self, spark, monkeypatch
+    ):
         # the large-n_groups plan form (centroids as a broadcast
         # payload, in-row filter+argmin) must train and assign exactly
-        # like the literal CASE form
+        # like the literal CASE form; a zero cell bound forces the
+        # broadcast form on a small geometry
+        from huckli_spark.operators import clustering
         from huckli_spark.operators.clustering import (
             kmeans_assign_grouped,
             kmeans_fit_grouped,
@@ -424,11 +443,12 @@ class TestSemDeDupTwoLevel:
         df = spark.createDataFrame(
             rows, "cid int, vec_id long, embedding array<float>"
         )
-        lit = kmeans_fit_grouped(df, k=2, iterations=3, plan_form="literal")
-        bc = kmeans_fit_grouped(df, k=2, iterations=3, plan_form="broadcast")
+        lit = kmeans_fit_grouped(df, k=2, iterations=3)
+        a_lit = kmeans_assign_grouped(df, lit)
+        monkeypatch.setattr(clustering, "GROUPED_LITERAL_CELL_BOUND", 0)
+        bc = kmeans_fit_grouped(df, k=2, iterations=3)
         assert lit == bc
-        a_lit = kmeans_assign_grouped(df, lit, plan_form="literal")
-        a_bc = kmeans_assign_grouped(df, lit, plan_form="broadcast")
+        a_bc = kmeans_assign_grouped(df, lit)
         assert sorted(map(tuple, a_lit.collect())) == sorted(
             map(tuple, a_bc.collect())
         )
@@ -474,7 +494,6 @@ class TestTripletPairForms:
         sql_rows = sorted(
             map(tuple, mine_triplets(
                 emb, k=2, iterations=2, pair_form="sql",
-                materialize=False,
             ).collect())
         )
         arrow_rows = sorted(
@@ -501,7 +520,7 @@ class TestTripletPairForms:
             emb, k=1, iterations=1, pair_form="arrow", max_block_cells=7,
         ).collect()))
         sql_rows = sorted(map(tuple, mine_triplets(
-            emb, k=1, iterations=1, pair_form="sql", materialize=False,
+            emb, k=1, iterations=1, pair_form="sql",
         ).collect()))
         assert big == tiny
         assert big == sql_rows

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Paired A/B: mine_triplets pair_form='sql' (baseline) vs 'arrow'
 (r13 candidate), alternating run-by-run within one SparkSession so
-co-tenant steal hits both arms (tools/abmeasure.py methodology).
+co-tenant steal hits both arms.
 
 Usage: python tools/triplet_ab.py [--sf DIR] [--pairs N]
 """
