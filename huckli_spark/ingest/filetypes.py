@@ -292,10 +292,6 @@ def _uuid(src: str) -> Column:
     return uuid16(F.col(src))
 
 
-def _dec(src: str) -> Column:
-    return proto_decimal(F.col(src))
-
-
 def parent_id() -> Column:
     """Deterministic uuid-shaped parent key (documented deviation from
     uuid4 — see module docstring)."""

@@ -21,7 +21,8 @@ Checkpoint parity (huckli-db/src/lib.rs:16-56):
   max of the ``prefix``/``file_timestamp`` columns of each file in the
   set ``table()`` scans (``_table_files``), read with pyarrow.
 
-Scale: ingest parallelism is the file-list repartition (A9's
+Scale: ingest parallelism is the ``binaryFile`` scan's tasks, widened
+to the cluster's cores when the batch holds fewer files (A9's
 ``.buffered(10)`` analog — except unbounded by a hardcoded 10; the
 task scheduler handles thousands of files); each target table write is
 a straight map-side pipeline (no shuffle) except the demux families,
@@ -44,7 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from huckli_spark.ingest.decode import decode_frames
-from huckli_spark.ingest.filetypes import REGISTRY, FileTypeSpec
+from huckli_spark.ingest.filetypes import (
+    REGISTRY,
+    FileTypeSpec,
+    load_enum_overrides_from_env,
+    warn_placeholder_enums,
+)
 from huckli_spark.sources.framing import frames_df
 from huckli_spark.sources.listing import FileInfo, FileSelection
 
@@ -142,6 +148,14 @@ class Warehouse:
 
         return TransactionLog(self.table_path(name))
 
+    def _logged(self, name: str) -> bool:
+        """A table with a transaction log is always read and written
+        through it, however this Warehouse was constructed: a plain
+        reader would scan replaced-partition orphans and uncommitted
+        files, and a plain write would land files no commit references
+        (invisible to readers, swept by the next vacuum)."""
+        return self.acid or self._log(name).exists()
+
     def has_table(self, name: str) -> bool:
         """True if the table directory holds parquet data at any depth.
 
@@ -150,13 +164,8 @@ class Warehouse:
         top-level ``*.parquet``, so a flat listdir misses every data
         table (VERDICT r02 "What's wrong #3"). Walk with early exit.
         """
-        # a table WITH a transaction log is read through it no matter
-        # how this Warehouse was constructed — otherwise a non-acid
-        # reader of an acid table would scan replaced-partition
-        # orphans and uncommitted files and silently return duplicates
-        log = self._log(name)
-        if self.acid or log.exists():
-            return log.exists()
+        if self._logged(name):
+            return self._log(name).exists()
         p = self.table_path(name)
         if not os.path.isdir(p):
             return False
@@ -170,7 +179,7 @@ class Warehouse:
         acid table (time travel — valid until vacuum sweeps the
         superseded files)."""
         base = self.table_path(name)
-        if self.acid or self._log(name).exists():  # acid-ness is a table property
+        if self._logged(name):
             files = self._table_files(name, as_of)
             if not files:
                 raise FileNotFoundError(f"acid table has no committed data: {name}")
@@ -190,10 +199,7 @@ class Warehouse:
         return reader.parquet(base)
 
     def append(self, name: str, df: DataFrame) -> None:
-        # once a table has a log it stays logged: a plain append would
-        # write files no commit references — invisible to readers and
-        # swept by the next vacuum
-        if self.acid or self._log(name).exists():
+        if self._logged(name):
             self._acid_append(name, df)
             return
         if self.idempotent and name != "files_processed" and "file_source" in df.columns:
@@ -252,7 +258,7 @@ class Warehouse:
         snapshot until the log entry lands; plain: tmp-dir swap)."""
         import shutil
 
-        if self.acid or self._log(name).exists():
+        if self._logged(name):
             log = self._log(name)
             staging = log.staging_dir()
             df.write.mode("overwrite").parquet(staging)
@@ -597,8 +603,8 @@ class Warehouse:
             schema=FILES_PROCESSED_SCHEMA,
         )
         name = f"part-{uuid.uuid4().hex}.parquet"
-        log = self._log("files_processed")
-        if self.acid or log.exists():
+        if self._logged("files_processed"):
+            log = self._log("files_processed")
             staging = log.staging_dir()
             os.makedirs(staging)
             pq.write_table(table, os.path.join(staging, name))
@@ -615,9 +621,8 @@ class Warehouse:
         (at version ``as_of``, if given), or for a plain table the
         directory's top-level files."""
         base = self.table_path(name)
-        log = self._log(name)
-        if self.acid or log.exists():
-            return [os.path.join(base, f) for f in log.live_files(as_of=as_of)]
+        if self._logged(name):
+            return [os.path.join(base, f) for f in self._log(name).live_files(as_of=as_of)]
         if not os.path.isdir(base):
             return []
         # mirrors the hidden-file rule of Spark's InMemoryFileIndex,
@@ -641,6 +646,19 @@ class Warehouse:
         return max(found, default=None)
 
     # -- ingest (§3.1 steps 6-8) -------------------------------------------
+    def decode(self, file_type: str, frames: DataFrame) -> DataFrame:
+        """Decode framed rows of ``file_type``, counting dropped frames
+        in ``dropped_frames`` — the step batch ingest and the stream
+        share. Enum overrides are applied here, before
+        ``decode_frames`` builds its ``mapInPandas``: PySpark pickles
+        the decode function (and the enum tables it holds) when the
+        plan is built, so an override applied later never reaches the
+        executors."""
+        msg = REGISTRY[file_type].msg
+        load_enum_overrides_from_env()
+        warn_placeholder_enums(msg, file_type)
+        return decode_frames(frames, msg, dropped_acc=self.dropped_frames)
+
     def commit_batch(
         self,
         file_type: str,
@@ -707,24 +725,14 @@ class Warehouse:
         target table (not per-file loops — the reference's per-file
         commit granularity is preserved only in the checkpoint rows).
         """
-        spec = REGISTRY[file_type]
         if not files:
             return {}
-        from huckli_spark.ingest.filetypes import (
-            load_enum_overrides_from_env,
-            warn_placeholder_enums,
-        )
-
-        load_enum_overrides_from_env()
-        warn_placeholder_enums(spec.msg, file_type)
         file_paths = [paths[f.key] if paths else f.key for f in files]
-        frames = frames_df(self.spark, file_paths)
-        # Decode parallelism is set by frames_df: the framed read runs
-        # one task per file, and the frames are repartitioned to
-        # defaultParallelism when the batch holds fewer files than
-        # that. At the 100 TB shape a batch already has >= core-count
-        # files and that shuffle is skipped.
-        decoded = decode_frames(frames, spec.msg, dropped_acc=self.dropped_frames)
+        # decode parallelism is frames_df's: the binaryFile scan's
+        # tasks, widened to defaultParallelism when the batch holds
+        # fewer files than that (at the 100 TB shape a batch fills the
+        # cluster and no shuffle is added)
+        decoded = self.decode(file_type, frames_df(self.spark, file_paths))
         return self.commit_batch(file_type, decoded, list(files))
 
     def ingest(

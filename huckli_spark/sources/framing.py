@@ -5,11 +5,14 @@ File format (/root/reference/huckli-s3/src/lib.rs:165-178): a
 4-byte BIG-ENDIAN u32 length prefix + payload (tokio
 ``LengthDelimitedCodec`` default).
 
-Spark integration is ``mapInPandas`` over a file-list DataFrame: each
-task streams its files through gzip decompression and yields Arrow
-batches of (file_source, frame_index, payload) — no whole-file
-buffering (parity with the reference's async framed stream), and the
-decode work scales horizontally with the file count.
+Spark integration is one ``mapInPandas`` over a ``binaryFile``
+DataFrame of (path, content), batch (``frames_df``) or streaming
+(``streaming.ingest.stream_ingest``) alike: ``frame_files`` streams
+each file's bytes through gzip decompression and yields Arrow batches
+of (file_source, frame_index, payload). A task holds each file's
+compressed bytes whole; decompression and framing are streamed (the
+reference's async framed stream), and the work scales with the file
+count.
 
 A truncated trailing frame ends the file's read: ``iter_frames`` drops
 it without counting it, as the reference's framed read simply ends.
@@ -29,10 +32,13 @@ from typing import TYPE_CHECKING, BinaryIO, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from huckli_spark.operators.parallel import fan_out
+
 if TYPE_CHECKING:
     import pandas as pd
 
 FRAME_HEADER = struct.Struct(">I")
+BATCH_ROWS = 2048  # frames per Arrow batch out of the framing task
 
 FRAMES_SCHEMA = T.StructType(
     [
@@ -79,20 +85,17 @@ def iter_frames(stream: BinaryIO, max_frame: int = 64 * 1024 * 1024) -> Iterator
         yield payload
 
 
-def frame_batches(
-    name: str, fh: BinaryIO, batch_rows: int
-) -> Iterator["pd.DataFrame"]:
+def frame_batches(name: str, fh: BinaryIO) -> Iterator["pd.DataFrame"]:
     """Frames of ONE decompressed file handle as pandas batches of
-    (file_source, frame_index, payload), at most ``batch_rows`` rows
-    each — the per-file loop of the batch reader (``frames_df``) and
-    the stream (``streaming.ingest.stream_frames``)."""
+    (file_source, frame_index, payload), at most ``BATCH_ROWS`` rows
+    each — the per-file loop of ``frame_files``."""
     import pandas as pd
 
     cols = ["file_source", "frame_index", "payload"]
     rows: list[tuple[str, int, bytes]] = []
     for i, payload in enumerate(iter_frames(io.BufferedReader(fh, 1 << 20))):
         rows.append((name, i, payload))
-        if len(rows) >= batch_rows:
+        if len(rows) >= BATCH_ROWS:
             yield pd.DataFrame(rows, columns=cols)
             rows = []
     if rows:
@@ -105,45 +108,38 @@ def open_maybe_gzip(path: str) -> BinaryIO:
     return open(path, "rb")
 
 
-def frames_df(
-    spark: SparkSession,
-    paths: list[str],
-    batch_rows: int = 2048,
-    tasks: int | None = None,
-) -> DataFrame:
-    """Distributed framed read: DataFrame of
-    (file_source, frame_index, payload).
+def frame_files(files: DataFrame) -> DataFrame:
+    """Frame a batch or streaming ``binaryFile`` DataFrame of
+    (path, content): a file is gunzipped iff its path ends in ``.gz``.
 
     ``file_source`` is the file's base name (the reference stores the
     S3 key as provenance on every row — A19,
-    huckli-import/src/lib.rs:23-37).
+    huckli-import/src/lib.rs:23-37)."""
 
-    Scale: one input row per file fans out to one task per file slice
-    (``repartition``), each task streaming-decodes its files; Arrow
-    batches bound memory to ``batch_rows`` frames.
-    """
-    files = spark.createDataFrame(
-        [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType(), False)])
-    )
-    n_tasks = tasks or min(len(paths), spark.sparkContext.defaultParallelism)
-    files = files.repartition(max(n_tasks, 1))
-
-    def decode_files(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def split(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            for path in pdf["path"]:
-                with open_maybe_gzip(path) as fh:
-                    yield from frame_batches(os.path.basename(path), fh, batch_rows)
+            for path, content in zip(pdf["path"], pdf["content"]):
+                fh: BinaryIO = io.BytesIO(content)
+                if path.endswith(".gz"):
+                    fh = gzip.GzipFile(fileobj=fh)  # type: ignore[assignment]
+                with fh:
+                    yield from frame_batches(os.path.basename(path), fh)
 
-    out = files.mapInPandas(decode_files, FRAMES_SCHEMA)
-    # Fan frames out past the file count: with fewer files than cores,
-    # the downstream wire-decode (the CPU-heaviest ingest stage) would
-    # otherwise run on len(paths) tasks. The shuffle moves only raw
-    # frame bytes — bounded by input size — and is skipped entirely at
-    # production file counts where the scan already fills the cluster.
-    # An explicit ``tasks`` cap is honored: callers throttling decode
-    # parallelism (memory-bound decode, deterministic single-task
-    # runs) must not be silently overridden.
-    par = tasks or spark.sparkContext.defaultParallelism
-    if len(paths) < par:
-        out = out.repartition(par)
-    return out
+    return files.select("path", "content").mapInPandas(split, FRAMES_SCHEMA)
+
+
+def frames_df(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Distributed framed read of ``paths``: DataFrame of
+    (file_source, frame_index, payload), through ``frame_files``.
+
+    The scan packs files into tasks; ``fan_out`` widens the frames to
+    ``defaultParallelism`` only when the scan is narrower, so the wire
+    decode (the CPU-heaviest ingest stage) never runs on fewer tasks
+    than cores, and a wide scan adds no shuffle.
+
+    Known costs: loading more than 32 paths runs one parallel listing
+    job (``spark.sql.sources.parallelPartitionDiscovery.threshold``);
+    a task holds each file's compressed bytes whole, and
+    ``binaryFile`` rejects a file over 2 GiB.
+    """
+    return fan_out(frame_files(spark.read.format("binaryFile").load(paths)))

@@ -16,7 +16,7 @@ the Spark-native continuous version of the same dataflow:
   its differential oracle.
 """
 
-from huckli_spark.streaming.ingest import stream_frames, stream_ingest
+from huckli_spark.streaming.ingest import stream_ingest
 from huckli_spark.streaming.sessionize import sessionize_batch, sessionize_stream
 from huckli_spark.streaming.windows import (
     events_stream,
@@ -26,7 +26,6 @@ from huckli_spark.streaming.windows import (
 )
 
 __all__ = [
-    "stream_frames",
     "stream_ingest",
     "sessionize_batch",
     "sessionize_stream",

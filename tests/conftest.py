@@ -38,7 +38,6 @@ _SLOW_FILES = {
     # rows keep streaming covered in the default tier)
     "test_streaming.py",
     "test_cache_discipline.py",
-    "test_all_filetypes.py",
     "test_mixture.py",
     "test_corpus_cli.py",
 }
@@ -71,6 +70,8 @@ _SLOW_NODES = (
     "test_txlog.py::TestChangeDataFeed::test_diff_classifies_iud",
     "test_txlog.py::test_time_travel_reads_past_versions",
     "test_txlog.py::TestMergeUpsert::test_apply_cdc_idempotent",
+    "test_all_filetypes.py::test_filetype_ingests[mobile-rewards]",
+    "test_all_filetypes.py::test_filetype_ingests[coverage-object]",
 )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from huckli_spark.functions.keys import helium_pubkey
 from huckli_spark.ingest.filetypes import REGISTRY
 from huckli_spark.ingest.warehouse import Warehouse
-from huckli_spark.sources.framing import write_framed_gzip
+from huckli_spark.sources.framing import write_frames, write_framed_gzip
 from huckli_spark.sources.listing import FileInfo, FileSelection
 from huckli_spark.sources.protowire import encode
 
@@ -110,6 +110,30 @@ class TestSpeedtestSlice:
         # observable metric, not just an executor-stderr line
         assert counts == {"verified_speedtest_report": 4}
         assert wh.dropped_frames.value == 1
+
+
+    def test_plain_framed_file_matches_its_gzip_twin(self, spark, tmp_path):
+        # the reader gunzips a file only if its name ends in .gz
+        payloads = _speedtest_payloads(10)
+        rows = []
+        for i, name in enumerate(
+            [f"verified_speedtest.{T0_MS}", f"verified_speedtest.{T0_MS}.gz"]
+        ):
+            raw = tmp_path / f"raw{i}"
+            raw.mkdir()
+            if name.endswith(".gz"):
+                write_framed_gzip(str(raw / name), payloads)
+            else:
+                with open(raw / name, "wb") as fh:
+                    write_frames(fh, payloads)
+            wh = Warehouse(spark, str(tmp_path / f"wh{i}"))
+            assert wh.ingest("verified-speedtest", str(raw)) == {
+                "verified_speedtest_report": 10
+            }
+            df = wh.table("verified_speedtest_report")
+            assert {r.file_source for r in df.select("file_source").collect()} == {name}
+            rows.append(sorted(df.drop("file_source").collect(), key=repr))
+        assert rows[0] == rows[1]
 
 
 class TestCheckpoint:
@@ -303,74 +327,80 @@ def _sql_max(wh, prefix: str):
     return datetime.fromtimestamp(0, tz=timezone.utc) + timedelta(microseconds=us)
 
 
+def _mobile_payloads(base_ms: int = T0_MS) -> list[bytes]:
+    """One mobile-rewards record of each reward variant; the radio
+    reward carries every child list (trust scores, speedtests, hexes)."""
+    msg = REGISTRY["mobile-rewards"].msg
+    periods = {"start_period": base_ms // 1000, "end_period": base_ms // 1000 + 86400}
+    return [
+        encode(msg, {**periods, "gateway_reward": {
+            "hotspot_key": KEY1, "dc_transfer_reward": 10,
+            "rewardable_bytes": 1000, "price": 5}}),
+        encode(msg, {**periods, "subscriber_reward": {
+            "subscriber_id": UUID1.bytes, "discovery_location_amount": 7,
+            "verification_mapping_amount": 3, "reward_override_entity_key": "k"}}),
+        encode(msg, {**periods, "service_provider_reward": {
+            "service_provider_id": "HELIUM_MOBILE", "amount": 99,
+            "rewardable_entity_key": "e"}}),
+        encode(msg, {**periods, "unallocated_reward": {
+            "reward_type": "UNALLOCATED_REWARD_TYPE_POC", "amount": 1}}),
+        encode(msg, {**periods, "promotion_reward": {
+            "entity": "promo", "service_provider_amount": 2, "matched_amount": 2}}),
+        encode(msg, {**periods, "radio_reward_v2": {
+            "hotspot_key": KEY2,
+            # decimals cross the wire as helium.Decimal{value} messages
+            "base_coverage_points_sum": {"value": "12.5"},
+            "boosted_coverage_points_sum": {"value": "not-a-number"},  # S5 -> 0.0
+            "base_reward_shares": {"value": "1.25"},
+            "boosted_reward_shares": {"value": "0"},
+            "base_poc_reward": 1000,
+            "boosted_poc_reward": 0,
+            "seniority_timestamp": base_ms // 1000,
+            "coverage_object": UUID1.bytes,
+            "location_trust_score_multiplier": {"value": "1.0"},
+            "speedtest_multiplier": {"value": "0.75"},
+            "sp_boosted_hex_status": "ELIGIBLE",
+            "oracle_boosted_hex_status": "ELIGIBLE",
+            "speedtest_average": {
+                "upload_speed_bps": 5,
+                "download_speed_bps": 50,
+                "latency_ms": 30,
+                "timestamp": base_ms // 1000,
+            },
+            "location_trust_scores": [
+                {"meters_to_asserted": 10, "trust_score": {"value": "0.9"}},
+                {"meters_to_asserted": 20, "trust_score": {"value": "0.5"}},
+            ],
+            "speedtests": [
+                {"upload_speed_bps": 1, "download_speed_bps": 2, "latency_ms": 3,
+                 "timestamp": base_ms // 1000},
+            ],
+            "covered_hexes": [
+                {"location": 631_236_437_021_704_191 % (1 << 60),
+                 "base_coverage_points": {"value": "4"},
+                 "boosted_coverage_points": {"value": "8"},
+                 "urbanized": "A", "footfall": "A",
+                 "landtype": "A", "assignment_multiplier": {"value": "1"},
+                 "rank": 1, "rank_multiplier": {"value": "1"},
+                 "boosted_multiplier": 2,
+                 "service_provider_override": False},
+                {"location": 7, "base_coverage_points": {"value": "2"},
+                 "boosted_coverage_points": {"value": "0"},
+                 "urbanized": "C",
+                 "footfall": "C", "landtype": "C",
+                 "assignment_multiplier": {"value": "0.5"}, "rank": 2,
+                 "rank_multiplier": {"value": "0.3"}, "boosted_multiplier": 0,
+                 "service_provider_override": True},
+            ],
+        }}),
+    ]
+
+
 class TestMobileDemuxExplode:
     def test_demux_and_children(self, wh, tmp_path):
         raw = tmp_path / "raw"
         raw.mkdir()
-        msg = REGISTRY["mobile-rewards"].msg
-        periods = {"start_period": T0_MS // 1000, "end_period": T0_MS // 1000 + 86400}
-        payloads = [
-            encode(msg, {**periods, "gateway_reward": {
-                "hotspot_key": KEY1, "dc_transfer_reward": 10,
-                "rewardable_bytes": 1000, "price": 5}}),
-            encode(msg, {**periods, "subscriber_reward": {
-                "subscriber_id": UUID1.bytes, "discovery_location_amount": 7,
-                "verification_mapping_amount": 3, "reward_override_entity_key": "k"}}),
-            encode(msg, {**periods, "service_provider_reward": {
-                "service_provider_id": "HELIUM_MOBILE", "amount": 99,
-                "rewardable_entity_key": "e"}}),
-            encode(msg, {**periods, "unallocated_reward": {
-                "reward_type": "UNALLOCATED_REWARD_TYPE_POC", "amount": 1}}),
-            encode(msg, {**periods, "promotion_reward": {
-                "entity": "promo", "service_provider_amount": 2, "matched_amount": 2}}),
-            encode(msg, {**periods, "radio_reward_v2": {
-                "hotspot_key": KEY2,
-                # decimals cross the wire as helium.Decimal{value} messages
-                "base_coverage_points_sum": {"value": "12.5"},
-                "boosted_coverage_points_sum": {"value": "not-a-number"},  # S5 -> 0.0
-                "base_reward_shares": {"value": "1.25"},
-                "boosted_reward_shares": {"value": "0"},
-                "base_poc_reward": 1000,
-                "boosted_poc_reward": 0,
-                "seniority_timestamp": T0_MS // 1000,
-                "coverage_object": UUID1.bytes,
-                "location_trust_score_multiplier": {"value": "1.0"},
-                "speedtest_multiplier": {"value": "0.75"},
-                "sp_boosted_hex_status": "ELIGIBLE",
-                "oracle_boosted_hex_status": "ELIGIBLE",
-                "speedtest_average": {
-                    "upload_speed_bps": 5,
-                    "download_speed_bps": 50,
-                    "latency_ms": 30,
-                    "timestamp": T0_MS // 1000,
-                },
-                "location_trust_scores": [
-                    {"meters_to_asserted": 10, "trust_score": {"value": "0.9"}},
-                    {"meters_to_asserted": 20, "trust_score": {"value": "0.5"}},
-                ],
-                "speedtests": [
-                    {"upload_speed_bps": 1, "download_speed_bps": 2, "latency_ms": 3,
-                     "timestamp": T0_MS // 1000},
-                ],
-                "covered_hexes": [
-                    {"location": 631_236_437_021_704_191 % (1 << 60),
-                     "base_coverage_points": {"value": "4"},
-                     "boosted_coverage_points": {"value": "8"},
-                     "urbanized": "A", "footfall": "A",
-                     "landtype": "A", "assignment_multiplier": {"value": "1"},
-                     "rank": 1, "rank_multiplier": {"value": "1"},
-                     "boosted_multiplier": 2,
-                     "service_provider_override": False},
-                    {"location": 7, "base_coverage_points": {"value": "2"},
-                     "boosted_coverage_points": {"value": "0"},
-                     "urbanized": "C",
-                     "footfall": "C", "landtype": "C",
-                     "assignment_multiplier": {"value": "0.5"}, "rank": 2,
-                     "rank_multiplier": {"value": "0.3"}, "boosted_multiplier": 0,
-                     "service_provider_override": True},
-                ],
-            }}),
-        ]
+        payloads = _mobile_payloads()
         write_framed_gzip(
             str(raw / f"mobile_network_reward_shares_v1.{T0_MS}.gz"), payloads
         )
@@ -400,6 +430,41 @@ class TestMobileDemuxExplode:
         # subscriber id rendered as uuid (S6)
         sub = wh.table("mobile_subscriber_rewards").collect()[0]
         assert sub.subscriber_id == str(UUID1)
+
+
+class TestBatchStreamParity:
+    def test_mobile_rewards_batch_equals_stream(self, spark, tmp_path):
+        """Batch ingest and the stream share the framed reader and the
+        decode step: the same files give the same rows in all 9
+        demuxed tables and the same dropped-frame count."""
+        from huckli_spark.streaming.ingest import stream_ingest
+
+        raw = tmp_path / "raw"
+        raw.mkdir()
+        for k, base_ms in enumerate([T0_MS, T0_MS + 3_600_000]):
+            payloads = _mobile_payloads(base_ms)
+            # complete frame, invalid protobuf: LEN field claiming 255 bytes
+            payloads.insert(k + 1, b"\x0a\xff\x01")
+            write_framed_gzip(
+                str(raw / f"mobile_network_reward_shares_v1.{base_ms}.gz"), payloads
+            )
+        batch = Warehouse(spark, str(tmp_path / "wh_batch"))
+        batch.ingest("mobile-rewards", str(raw))
+        stream = Warehouse(spark, str(tmp_path / "wh_stream"))
+        q = stream_ingest(
+            spark, "mobile-rewards", str(raw), stream, str(tmp_path / "ckpt")
+        )
+        assert q.awaitTermination(180)
+
+        tables = REGISTRY["mobile-rewards"].tables
+        assert len(tables) == 9
+        for name in tables:
+            got = [
+                sorted(wh.table(name).collect(), key=repr) for wh in (batch, stream)
+            ]
+            assert got[0], name
+            assert got[0] == got[1], name
+        assert batch.dropped_frames.value == stream.dropped_frames.value == 2
 
 
 class TestCoverageOneof:

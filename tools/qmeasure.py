@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Per-query measurement harness for the optimization rounds.
 
-For each named query: one untimed warmup (JIT + footer cache), then
-N timed noop-sink runs (guide §1.4), prints per-run walls + median,
+For each named query: N untimed warm-up runs (JIT + footer cache; after
+a single warm-up the third timed run still beat the first in 19 of 20
+invocations), then N timed noop-sink runs (guide §1.4); prints
+per-run walls + median,
 and optionally writes ``explain("formatted")`` to a file.
 
 Usage:
@@ -28,7 +30,6 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plans", default=None, help="dir for explain output")
-    ap.add_argument("--no-warmup", action="store_true")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
@@ -62,14 +63,8 @@ def main() -> None:
                 print(f"{name}: plan capture failed {type(e).__name__}: {e}",
                       flush=True)
         try:
-            if not args.no_warmup:
-                spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"warmup {name}")
-                spec.build(spark, args.sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
             ts = []
-            for i in range(args.runs):
+            for i in range(2 * args.runs):
                 spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"run{i} {name}")
                 t0 = time.perf_counter()
@@ -77,6 +72,7 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 ts.append(round(time.perf_counter() - t0, 3))
+            ts = ts[args.runs:]  # the first half only warms up
             med = sorted(ts)[len(ts) // 2]
             print(f"{name}: median={med} runs={ts} "
                   f"load={os.getloadavg()[0]:.2f}", flush=True)
